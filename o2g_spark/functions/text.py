@@ -207,13 +207,16 @@ def lang_id(text: Column | str) -> Column:
     def _pick(sc: Column) -> Column:
         # iterate in reverse-alphabetical order so that the final
         # (applied last) WHEN of the alphabetically-smallest code wins
-        # exact ties
-        mx = F.array_max(sc)
-        expr = F.lit("und")
-        for lang in sorted(langs, reverse=True):
-            score = sc[langs.index(lang)]
-            expr = F.when((mx > 0) & (score == mx), F.lit(lang)).otherwise(expr)
-        return expr
+        # exact ties; the max is let-bound too, so it is taken once per
+        # row instead of once per WHEN branch
+        def _chain(mx: Column) -> Column:
+            expr = F.lit("und")
+            for lang in sorted(langs, reverse=True):
+                score = sc[langs.index(lang)]
+                expr = F.when((mx > 0) & (score == mx), F.lit(lang)).otherwise(expr)
+            return expr
+
+        return F.transform(F.array(F.array_max(sc)), _chain)[0]
 
     picked = F.transform(
         F.array(F.transform(F.array(words(t)), _score_arr)[0]), _pick

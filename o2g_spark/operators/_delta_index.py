@@ -1,14 +1,31 @@
-"""Shared LSM-style delta machinery for the persisted index family.
+"""One lifecycle for the persisted near-dup indexes.
 
-The first-cut ``*_index_merge`` re-committed the WHOLE index as
-old ∪ new — an O(corpus) rewrite per crawl batch, which quietly
-defeats the O(batch) purpose of the incremental indexes at 100 TB.
-This module gives every index stage the LSM shape instead:
+The text (:mod:`.lsh_index`), embedding (:mod:`.emb_index`), media
+(:mod:`.media_index`) and video (:mod:`.video_index`) indexes share one
+shape, described by a frozen :class:`IndexSpec`:
+
+- the **first** stage is written from the input — shingle sets,
+  vectors, media signatures, video frame hashes. The expensive pass
+  (shingling, decode) runs here, once per input row, ever;
+- the **second** stage is derived from the committed first stage by the
+  spec's ``derive(first_rows, params)`` — band keys, per-clip sizes —
+  so it never re-reads the input;
+- the manifests of both stages (and of every delta) carry the spec's
+  ``param_keys``; :meth:`IndexSpec.open` refuses an index whose stages
+  disagree on them, whose stages cover different batches, or (for the
+  decoding indexes) that was built under another ``CODEC_REV``.
+
+Each index module keeps only its row builder, its ``derive``, its
+verification step and its public functions; build, merge, compact and
+the new × index ∪ new × new candidate join (:func:`candidate_pairs`)
+live here.
+
+Storage is LSM-shaped, so a merge is O(batch), never an O(corpus)
+rewrite:
 
 - a **base** snapshot (the stage itself, committed by the build), plus
 - **delta** stages (``<stage>.d00001``, ``.d00002``, …) — each an
-  ordinary committed checkpoint stage holding ONE batch, so a merge is
-  O(batch) work and an atomic commit;
+  ordinary committed checkpoint stage holding ONE batch;
 - readers see base ∪ live deltas (``read_with_deltas``);
 - an explicit **compaction** folds base + deltas into a new base
   (createOrReplace — the old base retires into snapshot history) and
@@ -19,11 +36,11 @@ Crash safety builds on the checkpoint layer's committed-marker
 semantics plus two conventions:
 
 - **idempotent merges**: each delta's manifest carries a
-  ``batch_digest`` (count + order-insensitive xxhash of the batch
-  ids). ``commit_delta`` refuses to commit a second live delta with
-  the same digest for the same stage, so the production shape "crash
-  after commit, rerun the identical command" re-finds the existing
-  delta instead of double-merging the batch.
+  ``batch_digest`` (count + order-insensitive xxhash of the batch ids;
+  a spec'd index digests its first-stage ``did`` rows). ``commit_delta``
+  refuses to commit a second delta with the same digest for the same
+  stage, so the production shape "crash after commit, rerun the identical command"
+  re-finds the existing delta instead of double-merging the batch.
 - **monotonic numbering across compactions**: the base manifest's
   ``compacted_through`` ordinal marks the highest delta folded in;
   readers skip deltas at or below it, which makes the
@@ -32,11 +49,10 @@ semantics plus two conventions:
   compaction). New deltas number from
   ``max(compacted_through, existing) + 1``.
 
-Multi-stage indexes (bands + payload) commit one delta PER stage per
-merge, tagged with the same ``batch_digest``; a crash between the two
-commits is detected by comparing the stages' digest sets
-(:func:`check_delta_lockstep`) and healed by rerunning the merge (the
-digest check skips the stage that already has the batch).
+A merge commits one delta PER stage, tagged with the same digest; a
+crash between the two commits is detected by comparing the stages'
+digest sets (:func:`check_delta_lockstep`) and healed by rerunning the
+merge (the digest check skips the stage that already has the batch).
 """
 
 from __future__ import annotations
@@ -45,10 +61,12 @@ import os
 import re
 import shutil
 from collections.abc import Callable
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import kernels
 from ..plans.checkpoint import CheckpointManager
 
 _DELTA_RE = re.compile(r"\.d(\d{5})$")
@@ -92,13 +110,6 @@ def live_delta_stages(ckpt: CheckpointManager, stage: str) -> list[str]:
     ]
 
 
-def live_delta_digests(ckpt: CheckpointManager, stage: str) -> list[str]:
-    return [
-        (ckpt.manifest(name) or {}).get("batch_digest")
-        for name in live_delta_stages(ckpt, stage)
-    ]
-
-
 def all_batch_digests(ckpt: CheckpointManager, stage: str) -> list[str]:
     """Every batch the stage's logical content covers: digests FOLDED
     into the base by compactions plus the live deltas'. This — not the
@@ -106,8 +117,9 @@ def all_batch_digests(ckpt: CheckpointManager, stage: str) -> list[str]:
     between two stages' compactions (content equal, layout different)
     is not a false inconsistency."""
     folded = (ckpt.manifest(stage) or {}).get("folded_digests", [])
-    return sorted([d or "" for d in folded]
-                  + [d or "" for d in live_delta_digests(ckpt, stage)])
+    live = [(ckpt.manifest(name) or {}).get("batch_digest")
+            for name in live_delta_stages(ckpt, stage)]
+    return sorted(d or "" for d in folded + live)
 
 
 def reset_extra(ckpt: CheckpointManager, stage: str) -> dict:
@@ -212,7 +224,6 @@ def compact(
     deltas folded. No-op (0) when there are no live deltas — but GC of
     already-folded leftovers still runs."""
     base_m = ckpt.manifest(stage) or {}
-    thru = int(base_m.get("compacted_through", 0))
     live = live_delta_stages(ckpt, stage)
     if live:
         new_thru = max(num for num, name in _delta_entries(ckpt, stage)
@@ -233,17 +244,167 @@ def compact(
         extra["compacted_through"] = new_thru
         # carry the folded-batch log forward so multi-stage lockstep
         # keeps comparing TOTAL batch coverage across compactions
-        extra["folded_digests"] = sorted(
-            [d or "" for d in base_m.get("folded_digests", [])]
-            + [d or "" for d in live_delta_digests(ckpt, stage)]
-        )
+        extra["folded_digests"] = all_batch_digests(ckpt, stage)
         ckpt.run_stage(stage, build, key_col=key_col, force=True,
                        partition_by=partition_by, manifest_extra=extra)
-        thru = new_thru
     # GC every delta at or below the (possibly new) compaction mark —
     # idempotent, also sweeps leftovers from a crashed earlier compact
-    for num, name in _delta_entries(ckpt, stage):
-        if num <= thru:
-            shutil.rmtree(os.path.join(ckpt.base_dir, name),
-                          ignore_errors=True)
+    gc_hidden(ckpt, stage)
     return len(live)
+
+
+@dataclass(frozen=True)
+class IndexSpec:
+    """One persisted index: its two stages (``first`` written from the
+    input, ``second`` derived from it), the manifest params that must
+    agree across stages and deltas, and the names its errors cite."""
+
+    label: str  # "LSH", "embedding", … — error messages only
+    build_fn: str  # the public build function a rebuild error names
+    first: str
+    first_part: str | None
+    second: str
+    second_part: str | None
+    param_keys: tuple[str, ...]
+    derive: Callable[[DataFrame, dict], DataFrame]
+    codec_rev: bool = False  # decoding index: refuse another CODEC_REV
+
+    def _stages(self) -> tuple[tuple[str, str | None], ...]:
+        return (self.first, self.first_part), (self.second, self.second_part)
+
+    def _extra(self, params: dict) -> dict:
+        rev = {"codec_rev": kernels.CODEC_REV} if self.codec_rev else {}
+        return {k: params[k] for k in self.param_keys} | rev
+
+    def open(self, spark: SparkSession, base_dir: str
+             ) -> tuple[CheckpointManager, dict]:
+        """(checkpoint manager, params) of a committed, consistent
+        index; raises FileNotFoundError / RuntimeError otherwise."""
+        ckpt = CheckpointManager(spark, base_dir)
+        m = ckpt.manifest(self.first)
+        ms = ckpt.manifest(self.second)
+        if not (m and m.get("committed") and ms and ms.get("committed")):
+            raise FileNotFoundError(
+                f"no committed {self.label} index at {base_dir!r}: run "
+                f"{self.build_fn}"
+            )
+        manifests = {self.first: m, self.second: ms} | {
+            name: ckpt.manifest(name)
+            for stage in (self.first, self.second)
+            for name in live_delta_stages(ckpt, stage)
+        }
+        for k in self.param_keys:
+            vals = {label: mm.get(k) for label, mm in manifests.items()}
+            if len(set(vals.values())) > 1:
+                raise RuntimeError(
+                    f"inconsistent {self.label} index at {base_dir!r}: {k} "
+                    f"differs across stages/deltas {vals} (interrupted "
+                    f"rebuild?) — rerun {self.build_fn}"
+                )
+        # a payload undecodable at build time has NO first-stage row; if
+        # a newer decode envelope can decode it, a re-crawled
+        # byte-identical copy would silently miss its indexed twin
+        if self.codec_rev and m.get("codec_rev") != kernels.CODEC_REV:
+            raise RuntimeError(
+                f"index at {base_dir!r} was built under media decode "
+                f"envelope rev {m.get('codec_rev')}; this build is rev "
+                f"{kernels.CODEC_REV} — payloads undecodable then may "
+                f"decode now, so incremental pairing would no longer "
+                f"equal the full run. Rerun {self.build_fn}(force=True)"
+            )
+        check_delta_lockstep(ckpt, [self.first, self.second], base_dir)
+        return ckpt, {k: m[k] for k in self.param_keys}
+
+    def build(self, spark: SparkSession, base_dir: str, params: dict,
+              rows: Callable[[], DataFrame], force: bool) -> None:
+        """Build (or resume) both stages. A forced rebuild replaces the
+        corpus, so existing deltas describe dead data: each base commit
+        hides them atomically (``compacted_through``), GC runs after."""
+        ckpt = CheckpointManager(spark, base_dir)
+        extra = self._extra(params)
+        builds = (rows,
+                  lambda: self.derive(ckpt.read_snapshot(self.first), params))
+        for (stage, part), fn in zip(self._stages(), builds):
+            ckpt.run_stage(stage, fn, key_col="did", force=force,
+                           partition_by=part,
+                           manifest_extra=extra | reset_extra(ckpt, stage))
+        for stage, _ in self._stages():
+            gc_hidden(ckpt, stage)
+
+    def batch(self, ckpt: CheckpointManager, params: dict, rows: DataFrame
+              ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+        """(new first, new second, index first, index second): the
+        batch's rows of both stages, each computed once, beside the
+        index's current content."""
+        new = rows.localCheckpoint()
+        return (new, self.derive(new, params).localCheckpoint(),
+                read_with_deltas(ckpt, self.first),
+                read_with_deltas(ckpt, self.second))
+
+    def merge(self, spark: SparkSession, base_dir: str,
+              rows: Callable[[dict], DataFrame]) -> None:
+        """Commit one batch as a delta of each stage — O(batch). Params
+        come from the manifests, so a merge can never change them. The
+        digest is taken over the batch's first-stage ``did`` rows."""
+        ckpt, params = self.open(spark, base_dir)
+        new = rows(params).localCheckpoint()
+        digest = batch_digest(new, "did")
+        builds = (lambda: new, lambda: self.derive(new, params))
+        for (stage, part), fn in zip(self._stages(), builds):
+            commit_delta(ckpt, stage, fn, key_col="did", digest=digest,
+                         partition_by=part, manifest_extra=self._extra(params))
+
+    def compact(self, spark: SparkSession, base_dir: str) -> int:
+        """Fold both stages' live deltas into their bases; returns the
+        number of deltas folded per stage."""
+        ckpt, params = self.open(spark, base_dir)
+        folded = [compact(ckpt, stage, "did", part, self._extra(params))
+                  for stage, part in self._stages()]
+        return folded[0]
+
+
+def candidate_pairs(
+    new: DataFrame, index: DataFrame, keys: list[str],
+    cap: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b) rows, id_a < id_b, one per shared key: new × index
+    ∪ new × new over ``did`` + ``keys`` rows. Not deduplicated — a pair
+    sharing k keys appears k times. With ``cap``, keys held by more
+    than ``cap`` rows of index ∪ new are dropped first: the same drop
+    set as a full-corpus run, at most n/cap keys, always
+    broadcastable."""
+    new, index = new.select("did", *keys), index.select("did", *keys)
+    if cap is not None:
+        hot = (
+            index.unionByName(new)
+            .groupBy(*keys).agg(F.count("*").alias("__n"))
+            .filter(F.col("__n") > cap)
+            .select(*keys)
+        )
+        new = new.join(F.broadcast(hot), keys, "left_anti")
+        index = index.join(F.broadcast(hot), keys, "left_anti")
+
+    def on(x: str, y: str, ids: F.Column) -> list[F.Column]:
+        return [F.col(f"{x}.{k}") == F.col(f"{y}.{k}") for k in keys] + [ids]
+
+    # new × index: AQE broadcasts the (small) new side; the index side
+    # prunes to the partitions its key prefix touches
+    nvi = new.alias("n").join(
+        index.alias("i"), on("n", "i", F.col("n.did") != F.col("i.did"))
+    ).select(F.least("n.did", "i.did").alias("id_a"),
+             F.greatest("n.did", "i.did").alias("id_b"))
+    nvn = new.alias("a").join(
+        new.alias("b"), on("a", "b", F.col("a.did") < F.col("b.did"))
+    ).select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
+    return nvi.unionByName(nvn)
+
+
+def with_sides(pairs: DataFrame, rows: DataFrame, cols: list[str]
+               ) -> DataFrame:
+    """``pairs`` joined to (did, cols…) ``rows`` on id_a and on id_b:
+    each column ``c`` arrives as ``c_a`` and ``c_b``."""
+    for s in ("a", "b"):
+        pairs = pairs.join(rows.select(
+            F.col("did").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols]), f"id_{s}")
+    return pairs

@@ -1,11 +1,11 @@
 """Persisted embedding-LSH index + incremental near-dup pairing.
 
-The embedding twin of :mod:`.lsh_index`: ``embedding_near_dup_pairs``
-re-bands and re-pairs the WHOLE corpus every run — O(corpus) work per
-increment, which stops existing at 100 TB. This module persists each
-vector's hyperplane band keys and the vector itself once through the
-checkpoint layer, and pairs a NEW batch against it with work
-proportional to the batch:
+``embedding_near_dup_pairs`` re-bands and re-pairs the WHOLE corpus
+every run — O(corpus) work per increment, which stops existing at
+100 TB. This module persists each vector once through the checkpoint
+layer, with its hyperplane band keys derived from the committed
+vectors, and pairs a NEW batch against it with work proportional to
+the batch:
 
     candidates = new × index (band-key join)  ∪  new × new (self-join)
     verify     = exact cosine (new vectors fresh, old from the index —
@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager
 from . import _delta_index as D
 from .similarity import cosine_prenormed, lsh_band_keys_udf, norm
 
@@ -38,29 +37,31 @@ BANDS_STAGE = "emb_bands"
 VECS_STAGE = "emb_vecs"
 
 
-def _banded_vec_rows(
-    df: DataFrame, id_col: str, vec_col: str,
-    bands: int, bits_per_band: int, seed: int, dim: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(banded, vecs): banded = one (did, band, key) row per
-    (vector, band); vecs = (did, vec). One Arrow matmul per batch;
-    posexplode runs on a materialized UDF output column (no
-    HOF-inlining risk, CLAUDE.md rules 1/8) behind a repartition
-    boundary so the matmul evaluates once."""
-    keys_udf = lsh_band_keys_udf(dim, bands, bits_per_band, seed)
+def _vec_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(did, vec); the repartition keeps the banding UDF parallel
+    even when a small input arrives as one split."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    sig = (
-        df.repartition(par, id_col)
-        .select(
-            F.col(id_col).alias("did"),
-            F.col(vec_col).alias("vec"),
-            keys_udf(F.col(vec_col)).alias("__keys"),
-        )
-    )
-    banded = sig.select(
-        "did", F.posexplode("__keys").alias("band", "key")
-    )
-    return banded, sig.select("did", "vec")
+    return df.repartition(par, id_col).select(
+        F.col(id_col).alias("did"), F.col(vec_col).alias("vec"))
+
+
+def _band_rows(vecs: DataFrame, params: dict) -> DataFrame:
+    """(did, band, key) — one row per (vector, band). One Arrow matmul
+    per batch; posexplode runs on a materialized UDF output column, so
+    the generator never re-evaluates the UDF."""
+    keys_udf = lsh_band_keys_udf(params["dim"], params["bands"],
+                                 params["bits_per_band"], params["seed"])
+    return vecs.select("did", keys_udf(F.col("vec")).alias("__keys")).select(
+        "did", F.posexplode("__keys").alias("band", "key"))
+
+
+SPEC = D.IndexSpec(
+    label="embedding", build_fn="emb_index_build",
+    first=VECS_STAGE, first_part=None,
+    second=BANDS_STAGE, second_part="band",
+    param_keys=("bands", "bits_per_band", "seed", "dim", "id_col"),
+    derive=_band_rows,
+)
 
 
 def emb_index_build(
@@ -82,54 +83,10 @@ def emb_index_build(
     if dim is None:
         first = vecs.select(F.size(F.col(vec_col)).alias("d")).first()
         dim = int(first["d"])
-    ckpt = CheckpointManager(spark, base_dir)
     params = {"bands": bands, "bits_per_band": bits_per_band,
               "seed": seed, "dim": dim, "id_col": id_col}
-
-    def build_bands() -> DataFrame:
-        banded, _ = _banded_vec_rows(
-            vecs, id_col, vec_col, bands, bits_per_band, seed, dim)
-        return banded
-
-    def build_vecs() -> DataFrame:
-        _, v = _banded_vec_rows(
-            vecs, id_col, vec_col, bands, bits_per_band, seed, dim)
-        return v
-
-    # a forced rebuild replaces the corpus: hide any existing deltas
-    # atomically with the base commit, then GC them
-    ckpt.run_stage(BANDS_STAGE, build_bands, key_col="did", force=force,
-                   partition_by="band",
-                   manifest_extra=params | D.reset_extra(ckpt, BANDS_STAGE))
-    ckpt.run_stage(VECS_STAGE, build_vecs, key_col="did", force=force,
-                   manifest_extra=params | D.reset_extra(ckpt, VECS_STAGE))
-    D.gc_hidden(ckpt, BANDS_STAGE)
-    D.gc_hidden(ckpt, VECS_STAGE)
-
-
-def _index_params(ckpt: CheckpointManager, base_dir: str) -> dict:
-    m = ckpt.manifest(BANDS_STAGE)
-    mv = ckpt.manifest(VECS_STAGE)
-    if not (m and m.get("committed") and mv and mv.get("committed")):
-        raise FileNotFoundError(
-            f"no committed embedding index at {base_dir!r}: "
-            "run emb_index_build"
-        )
-    manifests = [("bands", m), ("vecs", mv)] + [
-        (name, ckpt.manifest(name))
-        for stage in (BANDS_STAGE, VECS_STAGE)
-        for name in D.live_delta_stages(ckpt, stage)
-    ]
-    for k in ("bands", "bits_per_band", "seed", "dim"):
-        vals = {label: mm.get(k) for label, mm in manifests}
-        if len(set(vals.values())) > 1:
-            raise RuntimeError(
-                f"inconsistent embedding index at {base_dir!r}: {k} "
-                f"differs across stages/deltas {vals} (interrupted "
-                "rebuild?) — rerun emb_index_build"
-            )
-    D.check_delta_lockstep(ckpt, [BANDS_STAGE, VECS_STAGE], base_dir)
-    return m
+    SPEC.build(spark, base_dir, params,
+               lambda: _vec_rows(vecs, id_col, vec_col), force)
 
 
 def embedding_near_dup_incremental(
@@ -150,79 +107,28 @@ def embedding_near_dup_incremental(
     rows so the drop set equals the full run's. New ids must not
     collide with indexed ids (re-crawled urls go through
     dedup_keep_latest first)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    new_banded, new_v = _banded_vec_rows(
-        new_vecs, id_col, vec_col, params["bands"],
-        params["bits_per_band"], params["seed"], params["dim"])
-    new_banded = new_banded.localCheckpoint()  # Arrow matmul runs once
-    new_v = new_v.localCheckpoint()
-    idx_banded = D.read_with_deltas(ckpt, BANDS_STAGE)
-    idx_v = D.read_with_deltas(ckpt, VECS_STAGE)
-
-    if max_bucket is not None:
-        # hot list over the UNION — same drop set as the full-corpus
-        # run; at most n/max_bucket buckets, always broadcastable
-        hot = (
-            idx_banded.unionByName(new_banded)
-            .groupBy("band", "key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket)
-            .select("band", "key")
-        )
-        new_banded = new_banded.join(
-            F.broadcast(hot), ["band", "key"], "left_anti")
-        idx_banded = idx_banded.join(
-            F.broadcast(hot), ["band", "key"], "left_anti")
-
-    # new × index: the index side is the big one — join on (band, key);
-    # AQE broadcasts the new side when small. new × new: plain LSH
-    # self-join over the batch.
-    nvi = (
-        new_banded.alias("n")
-        .join(idx_banded.alias("i"),
-              (F.col("n.band") == F.col("i.band"))
-              & (F.col("n.key") == F.col("i.key"))
-              & (F.col("n.did") != F.col("i.did")))
-        .select(
-            F.least("n.did", "i.did").alias("id_a"),
-            F.greatest("n.did", "i.did").alias("id_b"),
-        )
-    )
-    a, b = new_banded.alias("a"), new_banded.alias("b")
-    nvn = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.did") < F.col("b.did")))
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-    )
-    pairs = nvi.unionByName(nvn).dropDuplicates(["id_a", "id_b"])
-
+    ckpt, p = SPEC.open(spark, base_dir)
+    new_v, new_banded, idx_v, idx_banded = SPEC.batch(
+        ckpt, p, _vec_rows(new_vecs, id_col, vec_col))
+    pairs = D.candidate_pairs(
+        new_banded, idx_banded, ["band", "key"], max_bucket
+    ).dropDuplicates(["id_a", "id_b"])
     # verification vectors: old from the index, new fresh — an id
-    # resolves from exactly one side (ids disjoint by contract)
-    v_all = idx_v.unionByName(new_v)
-    # per-side norm computed once per vector row, not per pair
+    # resolves from exactly one side (ids disjoint by contract). The
+    # per-side norm is computed once per vector row, not per pair
     # (bit-identical: see similarity.cosine_prenormed)
-    dim = int(params["dim"])  # unrolled codegen dot/norm (size-guarded)
-    v_all = v_all.select(
-        "did", "vec", norm(F.col("vec")).alias("__nrm")
-    )
-    va = v_all.select(
-        F.col("did").alias("id_a"), F.col("vec").alias("__va"),
-        F.col("__nrm").alias("__na"),
-    )
-    vb = v_all.select(
-        F.col("did").alias("id_b"), F.col("vec").alias("__vb"),
-        F.col("__nrm").alias("__nb"),
-    )
+    v_all = idx_v.unionByName(new_v).select(
+        "did", "vec", norm(F.col("vec")).alias("nrm"))
+    dim = int(p["dim"])  # unrolled codegen dot/norm (size-guarded)
     sim = F.round(
         cosine_prenormed(
-            F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb"), dim
+            F.col("vec_a"), F.col("vec_b"), F.col("nrm_a"), F.col("nrm_b"),
+            dim,
         ),
         6,
     )
     return (
-        pairs.join(va, "id_a").join(vb, "id_b")
+        D.with_sides(pairs, v_all, ["vec", "nrm"])
         .withColumn("sim", sim)
         .filter(F.col("sim") >= sim_threshold)
         .select("id_a", "id_b", "sim")
@@ -247,18 +153,8 @@ def emb_index_merge(
     the existing delta instead of duplicating rows — and a crash
     BETWEEN the two per-stage commits is detected at pairing time and
     healed by rerunning the merge."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    new_banded, new_v = _banded_vec_rows(
-        new_vecs, id_col, vec_col, params["bands"],
-        params["bits_per_band"], params["seed"], params["dim"])
-    digest = D.batch_digest(new_vecs, id_col)
-    extra = {k: params[k] for k in
-             ("bands", "bits_per_band", "seed", "dim", "id_col")}
-    D.commit_delta(ckpt, BANDS_STAGE, lambda: new_banded, key_col="did",
-                   digest=digest, partition_by="band", manifest_extra=extra)
-    D.commit_delta(ckpt, VECS_STAGE, lambda: new_v, key_col="did",
-                   digest=digest, manifest_extra=extra)
+    SPEC.merge(spark, base_dir,
+               lambda p: _vec_rows(new_vecs, id_col, vec_col))
 
 
 def emb_index_compact(spark: SparkSession, base_dir: str) -> int:
@@ -267,11 +163,4 @@ def emb_index_compact(spark: SparkSession, base_dir: str) -> int:
     base retires into snapshot history. Returns the number of deltas
     folded per stage. Reader output is unchanged by construction
     (pinned by test)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    extra = {k: params[k] for k in
-             ("bands", "bits_per_band", "seed", "dim", "id_col")}
-    n = D.compact(ckpt, BANDS_STAGE, key_col="did", partition_by="band",
-                  manifest_extra=extra)
-    D.compact(ckpt, VECS_STAGE, key_col="did", manifest_extra=extra)
-    return n
+    return SPEC.compact(spark, base_dir)

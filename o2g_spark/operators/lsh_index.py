@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as X
-from ..plans.checkpoint import CheckpointManager
 from . import _delta_index as D
 from .dedup import minhash_from_hashes
 
@@ -39,32 +38,31 @@ BANDS_STAGE = "lsh_bands"
 SHINGLES_STAGE = "lsh_shingles"
 
 
-def _banded_rows(
-    df: DataFrame, id_col: str, text_col: str,
-    num_hashes: int, bands: int, shingle_n: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(banded, shingles): banded = one (did, band, key) row per
-    (doc, band); shingles = (did, sh array). Same banding expressions
-    as minhash_lsh_pairs — project-then-explode (CLAUDE.md rule 1) and
-    a repartition boundary so the shingle+md5 pass evaluates once."""
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    rpb = num_hashes // bands
+def _shingle_rows(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
+) -> DataFrame:
+    """(did, sh) — one distinct-shingle set per document; the
+    repartition keeps shingling parallel on a one-split input."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    sig = (
-        df.repartition(par, id_col)
-        .select(
-            F.col(id_col).alias("did"),
-            X.shingles(text_col, shingle_n).alias("sh"),
-        )
-        .withColumn("__sig", minhash_signature_from_shingles("sh", num_hashes))
+    return df.repartition(par, id_col).select(
+        F.col(id_col).alias("did"),
+        X.shingles(text_col, shingle_n).alias("sh"),
     )
-    # __sig is LET-BOUND (transform over a 1-element array) so the
-    # banding stays one-signature-pass even if CollapseProject merges
-    # these projections and inlines the signature expression: as the
-    # outer transform's INPUT it evaluates once per row, whereas a bare
-    # F.col("__sig") reference inside the band lambda would re-derive
-    # the whole shingle+md5+minhash pass per BAND after inlining.
+
+
+def _band_rows(sh: DataFrame, params: dict) -> DataFrame:
+    """(did, band, key) — one row per (doc, band), derived from the
+    shingle sets. Same banding expressions as minhash_lsh_pairs;
+    project-then-explode, because GenerateExec evaluates a computed
+    generator array interpreted.
+
+    The signature is LET-BOUND (transform over a 1-element array): as
+    the outer transform's INPUT it evaluates once per row, whereas a
+    reference inside the band lambda would re-derive the whole
+    md5+minhash pass per BAND (plan shape pinned in test_letbind)."""
+    num_hashes, bands = params["num_hashes"], params["bands"]
+    rpb = num_hashes // bands
+
     def _bands_of(s: F.Column) -> F.Column:
         return F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -79,14 +77,14 @@ def _banded_rows(
             ),
         )
 
-    band_arr = F.transform(F.array(F.col("__sig")), _bands_of)[0]
-    banded = (
-        sig.select("did", band_arr.alias("__bands"))
+    sig = minhash_signature_from_shingles("sh", num_hashes)
+    return (
+        sh.select("did", F.transform(F.array(sig), _bands_of)[0]
+                  .alias("__bands"))
         .withColumn("__b", F.explode("__bands"))
         .select("did", F.col("__b.band").alias("band"),
                 F.col("__b.key").alias("key"))
     )
-    return banded, sig.select("did", "sh")
 
 
 def minhash_signature_from_shingles(sh_col: str, num_hashes: int):
@@ -96,6 +94,15 @@ def minhash_signature_from_shingles(sh_col: str, num_hashes: int):
     return minhash_from_hashes(
         F.transform(F.col(sh_col), X.md5_hash60), num_hashes
     )
+
+
+SPEC = D.IndexSpec(
+    label="LSH", build_fn="lsh_index_build",
+    first=SHINGLES_STAGE, first_part=None,
+    second=BANDS_STAGE, second_part="band",
+    param_keys=("num_hashes", "bands", "shingle_n", "id_col"),
+    derive=_band_rows,
+)
 
 
 def lsh_index_build(
@@ -113,55 +120,13 @@ def lsh_index_build(
     band keys hive-partitioned BY BAND (the incremental join's probe
     key prefix) and shingle sets for verification. Idempotent;
     ``force=True`` retires the old snapshots (createOrReplace)."""
-    ckpt = CheckpointManager(spark, base_dir)
+    if num_hashes % bands:
+        raise ValueError("bands must divide num_hashes")
     params = {"num_hashes": num_hashes, "bands": bands,
               "shingle_n": shingle_n, "id_col": id_col}
-
-    def build_bands() -> DataFrame:
-        banded, _ = _banded_rows(
-            docs, id_col, text_col, num_hashes, bands, shingle_n)
-        return banded
-
-    def build_shingles() -> DataFrame:
-        _, sh = _banded_rows(
-            docs, id_col, text_col, num_hashes, bands, shingle_n)
-        return sh
-
-    # a forced rebuild replaces the corpus, so any existing deltas
-    # describe dead data: hide them atomically with the base commit
-    # (compacted_through) and GC the directories after
-    ckpt.run_stage(BANDS_STAGE, build_bands, key_col="did", force=force,
-                   partition_by="band",
-                   manifest_extra=params | D.reset_extra(ckpt, BANDS_STAGE))
-    ckpt.run_stage(SHINGLES_STAGE, build_shingles, key_col="did",
-                   force=force,
-                   manifest_extra=params | D.reset_extra(ckpt, SHINGLES_STAGE))
-    D.gc_hidden(ckpt, BANDS_STAGE)
-    D.gc_hidden(ckpt, SHINGLES_STAGE)
-
-
-def _index_params(ckpt: CheckpointManager, base_dir: str) -> dict:
-    m = ckpt.manifest(BANDS_STAGE)
-    ms = ckpt.manifest(SHINGLES_STAGE)
-    if not (m and m.get("committed") and ms and ms.get("committed")):
-        raise FileNotFoundError(
-            f"no committed LSH index at {base_dir!r}: run lsh_index_build"
-        )
-    manifests = [("bands", m), ("shingles", ms)] + [
-        (name, ckpt.manifest(name))
-        for stage in (BANDS_STAGE, SHINGLES_STAGE)
-        for name in D.live_delta_stages(ckpt, stage)
-    ]
-    for k in ("num_hashes", "bands", "shingle_n"):
-        vals = {label: mm.get(k) for label, mm in manifests}
-        if len(set(vals.values())) > 1:
-            raise RuntimeError(
-                f"inconsistent LSH index at {base_dir!r}: {k} differs "
-                f"across stages/deltas {vals} (interrupted rebuild?) — "
-                "rerun lsh_index_build"
-            )
-    D.check_delta_lockstep(ckpt, [BANDS_STAGE, SHINGLES_STAGE], base_dir)
-    return m
+    SPEC.build(spark, base_dir, params,
+               lambda: _shingle_rows(docs, id_col, text_col, shingle_n),
+               force)
 
 
 def minhash_lsh_pairs_incremental(
@@ -179,50 +144,17 @@ def minhash_lsh_pairs_incremental(
     index manifests (caller cannot mismatch them). New doc ids must
     not collide with indexed ids (re-crawled urls go through
     dedup_keep_latest first)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    num_hashes, bands = params["num_hashes"], params["bands"]
-    shingle_n = params["shingle_n"]
-
-    new_banded, new_sh = _banded_rows(
-        new_docs, id_col, text_col, num_hashes, bands, shingle_n)
-    new_banded = new_banded.localCheckpoint()  # banding pass runs once
-    new_sh = new_sh.localCheckpoint()
-    idx_banded = D.read_with_deltas(ckpt, BANDS_STAGE)
-    idx_sh = D.read_with_deltas(ckpt, SHINGLES_STAGE)
-
-    # new × index: the index side is the big one — join on (band, key)
-    # with the NEW side broadcast when small (AQE decides; both sides
-    # carry only 8+16-byte keys plus the id). new × new: plain LSH
-    # self-join over the batch.
-    nvi = (
-        new_banded.alias("n")
-        .join(idx_banded.alias("i"),
-              (F.col("n.band") == F.col("i.band"))
-              & (F.col("n.key") == F.col("i.key"))
-              & (F.col("n.did") != F.col("i.did")))
-        .select(
-            F.least("n.did", "i.did").alias("id_a"),
-            F.greatest("n.did", "i.did").alias("id_b"),
-        )
-    )
-    a, b = new_banded.alias("a"), new_banded.alias("b")
-    nvn = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.did") < F.col("b.did")))
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-    )
-    pairs = nvi.unionByName(nvn).dropDuplicates(["id_a", "id_b"])
-
+    ckpt, p = SPEC.open(spark, base_dir)
+    new_sh, new_banded, idx_sh, idx_banded = SPEC.batch(
+        ckpt, p, _shingle_rows(new_docs, id_col, text_col, p["shingle_n"]))
+    pairs = D.candidate_pairs(
+        new_banded, idx_banded, ["band", "key"]
+    ).dropDuplicates(["id_a", "id_b"])
     # verification shingles: old docs from the index, new fresh — a
     # doc id resolves from exactly one side (ids disjoint by contract)
-    sh_all = idx_sh.unionByName(new_sh)
-    sha = sh_all.select(F.col("did").alias("id_a"), F.col("sh").alias("__sha"))
-    shb = sh_all.select(F.col("did").alias("id_b"), F.col("sh").alias("__shb"))
-    cand = pairs.join(sha, "id_a").join(shb, "id_b")
-    inter = F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
-    union = F.size(F.col("__sha")) + F.size(F.col("__shb")) - inter
+    cand = D.with_sides(pairs, idx_sh.unionByName(new_sh), ["sh"])
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
     return (
         cand.withColumn(
             "jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6))
@@ -249,18 +181,8 @@ def lsh_index_merge(
     the existing delta instead of duplicating rows — and a crash
     BETWEEN the two per-stage commits is detected at pairing time and
     healed by rerunning the merge."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    new_banded, new_sh = _banded_rows(
-        new_docs, id_col, text_col, params["num_hashes"], params["bands"],
-        params["shingle_n"])
-    digest = D.batch_digest(new_docs, id_col)
-    extra = {k: params[k] for k in
-             ("num_hashes", "bands", "shingle_n", "id_col")}
-    D.commit_delta(ckpt, BANDS_STAGE, lambda: new_banded, key_col="did",
-                   digest=digest, partition_by="band", manifest_extra=extra)
-    D.commit_delta(ckpt, SHINGLES_STAGE, lambda: new_sh, key_col="did",
-                   digest=digest, manifest_extra=extra)
+    SPEC.merge(spark, base_dir, lambda p: _shingle_rows(
+        new_docs, id_col, text_col, p["shingle_n"]))
 
 
 def lsh_index_compact(spark: SparkSession, base_dir: str) -> int:
@@ -270,11 +192,4 @@ def lsh_index_compact(spark: SparkSession, base_dir: str) -> int:
     snapshot history. Returns the number of deltas folded per stage.
     Output of every reader is unchanged by construction (pinned by
     test)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    extra = {k: params[k] for k in
-             ("num_hashes", "bands", "shingle_n", "id_col")}
-    n = D.compact(ckpt, BANDS_STAGE, key_col="did", partition_by="band",
-                  manifest_extra=extra)
-    D.compact(ckpt, SHINGLES_STAGE, key_col="did", manifest_extra=extra)
-    return n
+    return SPEC.compact(spark, base_dir)

@@ -1,8 +1,6 @@
 """Persisted perceptual-media index + incremental near-dup pairing.
 
-The media twin of :mod:`.lsh_index` (text) and :mod:`.emb_index`
-(embeddings): ``media_dedup.hamming_pairs`` re-decodes and re-pairs
-the WHOLE corpus every run — and for media the re-decode is the
+``media_dedup.hamming_pairs`` re-decodes and re-pairs the WHOLE corpus every run — and for media the re-decode is the
 dominant cost (BENCH §media near-dup: the signature pass IS the
 payload decode). This module persists each row's 64-bit perceptual
 signature once through the checkpoint layer — payload bytes are
@@ -30,11 +28,10 @@ modalities on accidental band collisions.
 Storage: ``media_bands`` (did, band, key) hive-partitioned BY BAND —
 the incremental join's probe prefix, pruning index reads to the
 band/bucket partitions the new batch actually touches — plus
-``media_sigs`` (did, sig) for verification, 16 bytes a row. Merges
-are O(batch) LSM deltas (:mod:`._delta_index`), compaction an
-explicit O(corpus) fold — the same lifecycle the text and embedding
-indexes use, with the same crash-idempotence (batch-digest dedupe,
-lockstep check across stages).
+``media_sigs`` (did, sig) for verification, 16 bytes a row; the bands
+derive from the committed signatures. Build, O(batch) delta merges,
+compaction and the codec-rev check are the shared lifecycle of
+:mod:`._delta_index`.
 """
 
 from __future__ import annotations
@@ -42,30 +39,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernels import CODEC_REV
-from ..plans.checkpoint import CheckpointManager
 from . import _delta_index as D
 from .media_dedup import _banded, media_signature_udf
 
 BANDS_STAGE = "media_bands"
 SIGS_STAGE = "media_sigs"
-
-_PARAM_KEYS = ("kind", "chunks", "band_chunks", "frame_samples", "id_col")
-
-
-def _check_codec_rev(m: dict, base_dir: str, rebuild: str) -> None:
-    """A payload undecodable at build time has NO signature row; if a
-    newer decode envelope can decode it, a re-crawled byte-identical
-    copy would silently miss its indexed twin. Refuse the stale index."""
-    rev = m.get("codec_rev")
-    if rev != CODEC_REV:
-        raise RuntimeError(
-            f"index at {base_dir!r} was built under media decode "
-            f"envelope rev {rev}; this build is rev {CODEC_REV} — "
-            f"payloads undecodable then may decode now, so incremental "
-            f"pairing would no longer equal the full run. Rerun "
-            f"{rebuild}(force=True)"
-        )
 
 
 def _sig_rows(
@@ -89,15 +67,24 @@ def _sig_rows(
     )
 
 
-def _band_rows(sigs: DataFrame, chunks: int, band_chunks: int) -> DataFrame:
+def _band_rows(sigs: DataFrame, params: dict) -> DataFrame:
     """(did, band, key) — the operator's own band keys
     (media_dedup._banded) over a (did, sig) frame."""
     s = sigs.select(F.col("did").alias("__id"), F.col("sig").alias("__sig"))
-    return _banded(s, chunks, band_chunks).select(
+    return _banded(s, params["chunks"], params["band_chunks"]).select(
         F.col("__id").alias("did"),
         F.col("__b.idx").alias("band"),
         F.col("__b.val").alias("key"),
     )
+
+
+SPEC = D.IndexSpec(
+    label="media", build_fn="media_index_build",
+    first=SIGS_STAGE, first_part=None,
+    second=BANDS_STAGE, second_part="band",
+    param_keys=("kind", "chunks", "band_chunks", "frame_samples", "id_col"),
+    derive=_band_rows, codec_rev=True,
+)
 
 
 def media_index_build(
@@ -115,54 +102,10 @@ def media_index_build(
     """Build (or resume) the persisted media index at ``base_dir``:
     band keys hive-partitioned by band plus the signature table.
     Idempotent; ``force=True`` retires the old snapshots."""
-    ckpt = CheckpointManager(spark, base_dir)
     params = {"kind": kind, "chunks": chunks, "band_chunks": band_chunks,
-              "frame_samples": frame_samples, "id_col": id_col,
-              "codec_rev": CODEC_REV}
-
-    def build_sigs() -> DataFrame:
-        return _sig_rows(media, kind, id_col, payload_col, frame_samples)
-
-    ckpt.run_stage(SIGS_STAGE, build_sigs, key_col="did", force=force,
-                   manifest_extra=params | D.reset_extra(ckpt, SIGS_STAGE))
-
-    def build_bands() -> DataFrame:
-        return _band_rows(
-            ckpt.read_snapshot(SIGS_STAGE), chunks, band_chunks)
-
-    # bands derive from the COMMITTED signature snapshot — the decode
-    # runs once even across the two stage builds
-    ckpt.run_stage(BANDS_STAGE, build_bands, key_col="did", force=force,
-                   partition_by="band",
-                   manifest_extra=params | D.reset_extra(ckpt, BANDS_STAGE))
-    D.gc_hidden(ckpt, SIGS_STAGE)
-    D.gc_hidden(ckpt, BANDS_STAGE)
-
-
-def _index_params(ckpt: CheckpointManager, base_dir: str) -> dict:
-    m = ckpt.manifest(BANDS_STAGE)
-    ms = ckpt.manifest(SIGS_STAGE)
-    if not (m and m.get("committed") and ms and ms.get("committed")):
-        raise FileNotFoundError(
-            f"no committed media index at {base_dir!r}: run "
-            "media_index_build"
-        )
-    manifests = [("bands", m), ("sigs", ms)] + [
-        (name, ckpt.manifest(name))
-        for stage in (BANDS_STAGE, SIGS_STAGE)
-        for name in D.live_delta_stages(ckpt, stage)
-    ]
-    for k in _PARAM_KEYS:
-        vals = {label: mm.get(k) for label, mm in manifests}
-        if len(set(vals.values())) > 1:
-            raise RuntimeError(
-                f"inconsistent media index at {base_dir!r}: {k} differs "
-                f"across stages/deltas {vals} (interrupted rebuild?) — "
-                "rerun media_index_build"
-            )
-    _check_codec_rev(m, base_dir, "media_index_build")
-    D.check_delta_lockstep(ckpt, [BANDS_STAGE, SIGS_STAGE], base_dir)
-    return m
+              "frame_samples": frame_samples, "id_col": id_col}
+    SPEC.build(spark, base_dir, params, lambda: _sig_rows(
+        media, kind, id_col, payload_col, frame_samples), force)
 
 
 def media_near_dup_incremental(
@@ -183,71 +126,27 @@ def media_near_dup_incremental(
     defaults to the pigeonhole recall bound chunks − band_chunks.
     New ids must not collide with indexed ids (re-crawled urls go
     through dedup_keep_latest first)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    chunks, band_chunks = params["chunks"], params["band_chunks"]
+    ckpt, p = SPEC.open(spark, base_dir)
+    bound = p["chunks"] - p["band_chunks"]
     if max_hamming is None:
-        max_hamming = chunks - band_chunks
-    if max_hamming > chunks - band_chunks:
+        max_hamming = bound
+    if max_hamming > bound:
         raise ValueError(
             "pigeonhole recall needs max_hamming <= chunks - band_chunks"
         )
-    new_sigs = _sig_rows(
-        new_media, params["kind"], id_col, payload_col,
-        params["frame_samples"],
-    ).localCheckpoint()  # the decode runs once
-    new_banded = _band_rows(new_sigs, chunks, band_chunks)
-    idx_banded = D.read_with_deltas(ckpt, BANDS_STAGE)
-    idx_sigs = D.read_with_deltas(ckpt, SIGS_STAGE)
-
-    if max_bucket is not None:
-        # hot list over the UNION — same drop set as the full-corpus
-        # run; at most n/max_bucket buckets, always broadcastable
-        hot = (
-            idx_banded.unionByName(new_banded)
-            .groupBy("band", "key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket)
-            .select("band", "key")
-        )
-        new_banded = new_banded.join(
-            F.broadcast(hot), ["band", "key"], "left_anti")
-        idx_banded = idx_banded.join(
-            F.broadcast(hot), ["band", "key"], "left_anti")
-
-    # new × index: join on (band, key) — the band-partitioned index
-    # side prunes to the partitions the new batch touches; AQE
-    # broadcasts the new side when small. new × new: self-join.
-    nvi = (
-        new_banded.alias("n")
-        .join(idx_banded.alias("i"),
-              (F.col("n.band") == F.col("i.band"))
-              & (F.col("n.key") == F.col("i.key"))
-              & (F.col("n.did") != F.col("i.did")))
-        .select(
-            F.least("n.did", "i.did").alias("id_a"),
-            F.greatest("n.did", "i.did").alias("id_b"),
-        )
-    )
-    a, b = new_banded.alias("a"), new_banded.alias("b")
-    nvn = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.did") < F.col("b.did")))
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-    )
-    pairs = nvi.unionByName(nvn).dropDuplicates(["id_a", "id_b"])
-
+    new_sigs, new_banded, idx_sigs, idx_banded = SPEC.batch(
+        ckpt, p, _sig_rows(new_media, p["kind"], id_col, payload_col,
+                           p["frame_samples"]))
+    pairs = D.candidate_pairs(
+        new_banded, idx_banded, ["band", "key"], max_bucket
+    ).dropDuplicates(["id_a", "id_b"])
     # verification signatures: old from the index, new fresh — an id
     # resolves from exactly one side (ids disjoint by contract)
-    s_all = idx_sigs.unionByName(new_sigs)
-    sa = s_all.select(F.col("did").alias("id_a"), F.col("sig").alias("__sa"))
-    sb = s_all.select(F.col("did").alias("id_b"), F.col("sig").alias("__sb"))
     return (
-        pairs.join(sa, "id_a").join(sb, "id_b")
+        D.with_sides(pairs, idx_sigs.unionByName(new_sigs), ["sig"])
         .withColumn(
             "hamming",
-            F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))),
+            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -267,22 +166,8 @@ def media_index_merge(
     them. Idempotent: each delta carries the batch's id-set digest, so
     re-merging an already-merged batch re-finds the existing delta
     instead of duplicating rows."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    new_sigs = _sig_rows(
-        new_media, params["kind"], id_col, payload_col,
-        params["frame_samples"],
-    ).localCheckpoint()
-    digest = D.batch_digest(new_sigs, "did")
-    extra = {k: params[k] for k in _PARAM_KEYS} | {"codec_rev": CODEC_REV}
-    D.commit_delta(ckpt, SIGS_STAGE, lambda: new_sigs, key_col="did",
-                   digest=digest, manifest_extra=extra)
-    D.commit_delta(
-        ckpt, BANDS_STAGE,
-        lambda: _band_rows(new_sigs, params["chunks"], params["band_chunks"]),
-        key_col="did", digest=digest, partition_by="band",
-        manifest_extra=extra,
-    )
+    SPEC.merge(spark, base_dir, lambda p: _sig_rows(
+        new_media, p["kind"], id_col, payload_col, p["frame_samples"]))
 
 
 def media_index_compact(spark: SparkSession, base_dir: str) -> int:
@@ -290,10 +175,4 @@ def media_index_compact(spark: SparkSession, base_dir: str) -> int:
     operation — run on YOUR schedule) and GC them. Returns the number
     of deltas folded per stage. Reader output is unchanged by
     construction (pinned by test)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    extra = {k: params[k] for k in _PARAM_KEYS} | {"codec_rev": CODEC_REV}
-    n = D.compact(ckpt, SIGS_STAGE, key_col="did", manifest_extra=extra)
-    D.compact(ckpt, BANDS_STAGE, key_col="did", partition_by="band",
-              manifest_extra=extra)
-    return n
+    return SPEC.compact(spark, base_dir)

@@ -92,55 +92,6 @@ def zone_covers(
     )
 
 
-# total-edge budget for the literal-expression ray cast ("jvm" mode):
-# beyond this the expression tree (4 doubles/edge) stops being a sane
-# plan constant and the Arrow path must be used
-JVM_RAYCAST_MAX_EDGES = 8192
-
-
-def _raycast_jvm(
-    rings_by_zone: dict[int, list[np.ndarray]], lon: F.Column, lat: F.Column
-) -> F.Column:
-    """Pure-JVM even-odd ray cast — NO Python in the plan.
-
-    The zone's edges are UNROLLED into plain literal comparisons under
-    a per-zone CASE chain, so the whole refine runs inside whole-stage
-    codegen with zero allocation. (The obvious alternatives both
-    measured worse: the Arrow-UDF refine ships EVERY joined row through
-    Python — Catalyst hoists UDFs out of filters — doubling runnable
-    threads in local mode and burning serialization CPU at scale; an
-    F.aggregate over a literal edge array stays JVM-side but is
-    interpreted and allocation-heavy, and its lambda's outer lon/lat
-    references are invisible to HigherOrderFunction.references, which
-    makes Catalyst mis-push the predicate into the covers-side local
-    relation — INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at bind time.)
-
-    Bit-identical to kernels.geometry.points_in_ring: per edge,
-    straddle = (y0 > y) != (y1 > y) and crossing iff
-    x < x0 + (y - y0)·(x1 - x0)/(y1 - y0); the edge deltas are folded
-    driver-side (same IEEE ops, same order). Even-odd parity over the
-    flattened union of ring edges equals the per-ring XOR, so holes
-    work unchanged.
-    """
-    result: F.Column | None = None
-    for zid, rings in rings_by_zone.items():
-        cnt: F.Column | None = None
-        for x0, y0, x1, y1 in geometry._edges(rings):
-            x0, y0, x1, y1 = float(x0), float(y0), float(x1), float(y1)
-            if y0 == y1:
-                continue  # horizontal edge never straddles
-            straddle = (F.lit(y0) > lat) != (F.lit(y1) > lat)
-            xint = F.lit(x0) + (lat - F.lit(y0)) * F.lit(x1 - x0) / F.lit(y1 - y0)
-            term = F.when(straddle & (lon < xint), F.lit(1)).otherwise(F.lit(0))
-            cnt = term if cnt is None else cnt + term
-        inside = F.lit(False) if cnt is None else (cnt % 2 == 1)
-        cond = F.col("zone_id") == F.lit(int(zid))
-        result = F.when(cond, inside) if result is None else result.when(cond, inside)
-    if result is None:
-        return F.lit(False)
-    return F.coalesce(result, F.lit(False))
-
-
 def _raycast_udf(spark: SparkSession, rings_by_zone: dict[int, list[np.ndarray]]):
     """BooleanType Arrow UDF: exact PIP for (zone_id, lon, lat) batches.
 
@@ -180,13 +131,8 @@ def pip_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     broadcast_covers: bool = True,
-    raycast: str = "arrow",
 ) -> DataFrame:
     """points ⋈ zones (point-in-polygon). Output: point columns + zone_id.
-
-    ``raycast``: "arrow" (default — numpy-vectorized pandas UDF, fastest
-    measured) or "jvm" (unrolled literal-edge expressions, zero Python
-    in the plan; for executor environments without Python workers).
 
     Exact (not approximate): interior-cell hits skip geometry, boundary
     hits are ray-cast. Deterministic and partition-invariant — the
@@ -199,8 +145,7 @@ def pip_join(
     hit at most one cover cell per zone. Map-only over the point table.
     Catalyst hoists the refine UDF over every joined row, so its inputs
     are null-masked for interior hits — only the boundary sliver pays
-    actual ray-cast work (Python-side in "arrow" mode, CASE-guarded
-    codegen in "jvm" mode).
+    actual ray-cast work.
     """
     spark = points.sparkSession
     covers, res_list = zone_covers(spark, rings_by_zone, res, base_res)
@@ -224,40 +169,23 @@ def pip_join(
     # the exact ray cast. (A union of two filtered branches would
     # re-execute the whole explode+join per branch — measured 2×; the
     # point stream itself, e.g. a regex geotag extraction, is usually
-    # the expensive part.)
-    if raycast == "jvm":
-        # pure-JVM refine (no Python workers in the plan at all) for
-        # deployments that can't run Python on executors. Measured
-        # SLOWER than the Arrow path at 64M pages/local[32] (refine
-        # 8.6 s interpreted vs 3.8 s Arrow+numpy) — vectorized numpy
-        # over Arrow batches beats per-row JVM expression eval even
-        # counting the serialization round trip.
-        total_edges = sum(len(geometry._edges(r)) for r in rings_by_zone.values())
-        if total_edges > JVM_RAYCAST_MAX_EDGES:
-            raise ValueError(
-                f"jvm raycast supports <= {JVM_RAYCAST_MAX_EDGES} total edges "
-                f"(got {total_edges}); use raycast='arrow'"
-            )
-        keep = (F.col("kind") == "interior") | _raycast_jvm(
-            rings_by_zone, F.col(lon_col), F.col(lat_col)
-        )
-    else:
-        # default: zone geometry ships once per executor as a Spark
-        # broadcast; Catalyst hoists the pandas UDF out of the OR into
-        # an ArrowEvalPython over EVERY joined row, so the inputs are
-        # pre-masked to null for interior hits — Python then skips them
-        # and only the boundary sliver pays the (numpy-vectorized)
-        # ray cast.
-        inside = _raycast_udf(spark, rings_by_zone)
-        is_boundary = F.col("kind") == "boundary"
-        keep = (F.col("kind") == "interior") | F.coalesce(
-            inside(
-                F.when(is_boundary, F.col("zone_id")),
-                F.when(is_boundary, F.col(lon_col)),
-                F.when(is_boundary, F.col(lat_col)),
-            ),
-            F.lit(False),
-        )
+    # the expensive part.) Zone geometry ships once per executor as a
+    # Spark broadcast; Catalyst hoists the pandas UDF out of the OR
+    # into an ArrowEvalPython over EVERY joined row, so the inputs are
+    # pre-masked to null for interior hits — Python then skips them and
+    # only the boundary sliver pays the (numpy-vectorized) ray cast.
+    # (A pure-JVM unrolled-edge refine measured 2× slower: 8.6 s vs
+    # 3.8 s at 64M pages.)
+    inside = _raycast_udf(spark, rings_by_zone)
+    is_boundary = F.col("kind") == "boundary"
+    keep = (F.col("kind") == "interior") | F.coalesce(
+        inside(
+            F.when(is_boundary, F.col("zone_id")),
+            F.when(is_boundary, F.col(lon_col)),
+            F.when(is_boundary, F.col(lat_col)),
+        ),
+        F.lit(False),
+    )
     out_cols = [c for c in points.columns] + ["zone_id"]
     return joined.filter(keep).select(*out_cols)
 
@@ -271,8 +199,12 @@ def pip_anti(
 ) -> DataFrame:
     """Points inside NO zone — the dangling-ref audit (o2g A7 parity:
     members whose ref resolves nowhere are dropped, and the audit path
-    counts them via an anti join)."""
+    counts them via an anti join). The anti join is null-safe on every
+    point column: a matched point with a null attribute must not
+    survive it."""
+    cols = points.columns
     matched = pip_join(
         points, rings_by_zone, res, lat_col=lat_col, lon_col=lon_col
-    ).select(*points.columns)
-    return points.join(matched, on=points.columns, how="left_anti")
+    ).select(*cols).toDF(*[f"__m{i}" for i in range(len(cols))])
+    on = [points[c].eqNullSafe(matched[f"__m{i}"]) for i, c in enumerate(cols)]
+    return points.join(matched, on=on, how="left_anti")

@@ -1,7 +1,5 @@
 """Persisted video frame-hash index + incremental near-dup pairing.
 
-The VIDEO member of the index family (:mod:`.lsh_index` text,
-:mod:`.emb_index` embeddings, :mod:`.media_index` image/audio):
 ``video.video_near_dup_pairs`` re-decodes every clip's frames on
 every run — and the decode (container walk + per-frame unpack +
 dHash) dominates at media scale. This module persists each clip's
@@ -27,10 +25,9 @@ Storage: ``video_frames`` (did, dhash, fpart) hive-partitioned by
 the incremental read prunes to the ≤64 partitions the new batch's
 hashes actually land in (an explicit ``isin`` filter, bounded by the
 partition count, not the corpus) — plus ``video_sizes`` (did, n)
-for the jaccard denominators, one small row per clip. Merges are
-O(batch) LSM deltas (:mod:`._delta_index`), compaction an explicit
-O(corpus) fold — the same lifecycle and crash-idempotence as the
-other three indexes.
+for the jaccard denominators, one small row per clip, derived from the
+committed frames. Build, O(batch) delta merges, compaction and the
+codec-rev check are the shared lifecycle of :mod:`._delta_index`.
 """
 
 from __future__ import annotations
@@ -38,16 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernels import CODEC_REV
-from ..plans.checkpoint import CheckpointManager
 from . import _delta_index as D
-from .media_index import _check_codec_rev
 
 FRAMES_STAGE = "video_frames"
 SIZES_STAGE = "video_sizes"
 
 N_FPART = 64
-_PARAM_KEYS = ("every_k", "id_col")
 
 
 def _frame_rows(
@@ -75,8 +68,18 @@ def _frame_rows(
     )
 
 
-def _size_rows(frames: DataFrame) -> DataFrame:
+def _size_rows(frames: DataFrame, params: dict) -> DataFrame:
+    """(did, n) — distinct-frame count per clip (no param needed)."""
     return frames.groupBy("did").agg(F.count("*").alias("n"))
+
+
+SPEC = D.IndexSpec(
+    label="video", build_fn="video_index_build",
+    first=FRAMES_STAGE, first_part="fpart",
+    second=SIZES_STAGE, second_part=None,
+    param_keys=("every_k", "id_col"),
+    derive=_size_rows, codec_rev=True,
+)
 
 
 def video_index_build(
@@ -91,52 +94,9 @@ def video_index_build(
     """Build (or resume) the persisted video index at ``base_dir``:
     frame hashes hive-partitioned by fpart plus the per-clip size
     table. Idempotent; ``force=True`` retires the old snapshots."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = {"every_k": every_k, "id_col": id_col,
-              "codec_rev": CODEC_REV}
-
-    def build_frames() -> DataFrame:
-        return _frame_rows(media, id_col, payload_col, every_k)
-
-    ckpt.run_stage(FRAMES_STAGE, build_frames, key_col="did", force=force,
-                   partition_by="fpart",
-                   manifest_extra=params | D.reset_extra(ckpt, FRAMES_STAGE))
-
-    def build_sizes() -> DataFrame:
-        # sizes derive from the COMMITTED frame snapshot — the decode
-        # runs once even across the two stage builds
-        return _size_rows(ckpt.read_snapshot(FRAMES_STAGE))
-
-    ckpt.run_stage(SIZES_STAGE, build_sizes, key_col="did", force=force,
-                   manifest_extra=params | D.reset_extra(ckpt, SIZES_STAGE))
-    D.gc_hidden(ckpt, FRAMES_STAGE)
-    D.gc_hidden(ckpt, SIZES_STAGE)
-
-
-def _index_params(ckpt: CheckpointManager, base_dir: str) -> dict:
-    m = ckpt.manifest(FRAMES_STAGE)
-    ms = ckpt.manifest(SIZES_STAGE)
-    if not (m and m.get("committed") and ms and ms.get("committed")):
-        raise FileNotFoundError(
-            f"no committed video index at {base_dir!r}: run "
-            "video_index_build"
-        )
-    manifests = [("frames", m), ("sizes", ms)] + [
-        (name, ckpt.manifest(name))
-        for stage in (FRAMES_STAGE, SIZES_STAGE)
-        for name in D.live_delta_stages(ckpt, stage)
-    ]
-    for k in _PARAM_KEYS:
-        vals = {label: mm.get(k) for label, mm in manifests}
-        if len(set(vals.values())) > 1:
-            raise RuntimeError(
-                f"inconsistent video index at {base_dir!r}: {k} differs "
-                f"across stages/deltas {vals} (interrupted rebuild?) — "
-                "rerun video_index_build"
-            )
-    _check_codec_rev(m, base_dir, "video_index_build")
-    D.check_delta_lockstep(ckpt, [FRAMES_STAGE, SIZES_STAGE], base_dir)
-    return m
+    SPEC.build(spark, base_dir, {"every_k": every_k, "id_col": id_col},
+               lambda: _frame_rows(media, id_col, payload_col, every_k),
+               force)
 
 
 def video_near_dup_incremental(
@@ -156,70 +116,30 @@ def video_near_dup_incremental(
     manifests (caller cannot mismatch them). New ids must not collide
     with indexed ids (re-crawled urls go through dedup_keep_latest
     first)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    new_frames = _frame_rows(
-        new_media, id_col, payload_col, params["every_k"]
-    ).localCheckpoint()  # the decode runs once
-    new_sizes = _size_rows(new_frames)
+    ckpt, p = SPEC.open(spark, base_dir)
+    new_frames, new_sizes, idx_frames, idx_sizes = SPEC.batch(
+        ckpt, p, _frame_rows(new_media, id_col, payload_col, p["every_k"]))
 
     # explicit partition pruning: the index read narrows to the ≤64
     # fpart dirs the new batch's hashes land in (pure function of the
     # join key, so every possible shared hash survives the pruning)
     touched = [r.fpart for r in new_frames.select("fpart").distinct().collect()]
-    idx_frames = D.read_with_deltas(ckpt, FRAMES_STAGE).filter(
+    idx_frames = idx_frames.filter(
         F.col("fpart").isin(touched) if touched else F.lit(False)
     )
-    idx_sizes = D.read_with_deltas(ckpt, SIZES_STAGE)
-
-    nf = new_frames.select("did", "dhash")
-    xf = idx_frames.select("did", "dhash")
-    if max_df is not None:
-        # hot list over the UNION — same drop set as the full-corpus
-        # run for every hash a new clip holds; ≤ n/max_df hashes,
-        # always broadcastable
-        hot = (
-            xf.unionByName(nf)
-            .groupBy("dhash").agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("dhash")
-        )
-        nf = nf.join(F.broadcast(hot), "dhash", "left_anti")
-        xf = xf.join(F.broadcast(hot), "dhash", "left_anti")
-
-    nvi = (
-        nf.alias("n")
-        .join(xf.alias("i"), F.col("n.dhash") == F.col("i.dhash"))
-        .select(
-            F.least("n.did", "i.did").alias("id_a"),
-            F.greatest("n.did", "i.did").alias("id_b"),
-        )
-    )
-    a, b = nf.alias("a"), nf.alias("b")
-    nvn = (
-        a.join(b, (F.col("a.dhash") == F.col("b.dhash"))
-               & (F.col("a.did") < F.col("b.did")))
-        .select(F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b"))
-    )
     shared = (
-        nvi.unionByName(nvn)
+        D.candidate_pairs(new_frames, idx_frames, ["dhash"], max_df)
         .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__shared"))
+        .agg(F.count("*").alias("shared"))
     )
 
     # denominators: FULL distinct-frame counts (never reduced by the
     # cap — the batch operator's exact semantics), old from the index,
     # new fresh; an id resolves from exactly one side
-    s_all = idx_sizes.unionByName(new_sizes)
-    na = s_all.select(F.col("did").alias("id_a"), F.col("n").alias("__na"))
-    nb = s_all.select(F.col("did").alias("id_b"), F.col("n").alias("__nb"))
     jac = F.round(
-        F.col("__shared")
-        / (F.col("__na") + F.col("__nb") - F.col("__shared")),
-        6,
-    )
+        F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")), 6)
     return (
-        shared.join(na, "id_a").join(nb, "id_b")
+        D.with_sides(shared, idx_sizes.unionByName(new_sizes), ["n"])
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
@@ -238,18 +158,8 @@ def video_index_merge(
     Idempotent: each delta carries the batch's id-set digest, so
     re-merging an already-merged batch re-finds the existing delta
     instead of duplicating rows."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    new_frames = _frame_rows(
-        new_media, id_col, payload_col, params["every_k"]
-    ).localCheckpoint()
-    digest = D.batch_digest(new_frames, "did")
-    extra = {k: params[k] for k in _PARAM_KEYS} | {"codec_rev": CODEC_REV}
-    D.commit_delta(ckpt, FRAMES_STAGE, lambda: new_frames, key_col="did",
-                   digest=digest, partition_by="fpart",
-                   manifest_extra=extra)
-    D.commit_delta(ckpt, SIZES_STAGE, lambda: _size_rows(new_frames),
-                   key_col="did", digest=digest, manifest_extra=extra)
+    SPEC.merge(spark, base_dir, lambda p: _frame_rows(
+        new_media, id_col, payload_col, p["every_k"]))
 
 
 def video_index_compact(spark: SparkSession, base_dir: str) -> int:
@@ -257,10 +167,4 @@ def video_index_compact(spark: SparkSession, base_dir: str) -> int:
     operation — run on YOUR schedule) and GC them. Returns the number
     of deltas folded per stage. Reader output is unchanged by
     construction (pinned by test)."""
-    ckpt = CheckpointManager(spark, base_dir)
-    params = _index_params(ckpt, base_dir)
-    extra = {k: params[k] for k in _PARAM_KEYS} | {"codec_rev": CODEC_REV}
-    n = D.compact(ckpt, FRAMES_STAGE, key_col="did", partition_by="fpart",
-                  manifest_extra=extra)
-    D.compact(ckpt, SIZES_STAGE, key_col="did", manifest_extra=extra)
-    return n
+    return SPEC.compact(spark, base_dir)

@@ -129,8 +129,8 @@ def test_param_mismatch_and_missing_index_raise(spark, corpus, tmp_path):
     # simulate an interrupted rebuild: vecs stage re-committed under
     # different banding params
     ckpt = CheckpointManager(spark, base)
-    _, v = emb_index._banded_vec_rows(
-        corpus.filter("vec_id < 80"), "vec_id", "embedding", 4, 8, 42, DIM)
+    v = emb_index._vec_rows(
+        corpus.filter("vec_id < 80"), "vec_id", "embedding")
     ckpt.run_stage(emb_index.VECS_STAGE, lambda: v, key_col="did",
                    force=True,
                    manifest_extra={"bands": 4, "bits_per_band": 8,

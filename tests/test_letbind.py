@@ -5,6 +5,11 @@ result-identical to the expression it replaced — the 105-query oracle
 gate pins the bulk data; these tests pin the null/empty/short edges the
 gate corpora never exercise, where the rewrite touches null plumbing
 (array-of-null binding, array_max-vs-greatest null semantics).
+
+The plan-shape cases pin the bindings themselves: each site's expensive
+subexpression must appear ONCE in the optimized plan, outside the
+per-element loops that consume it, so an optimizer rewrite that inlines
+a binding fails here instead of silently costing 2-50×.
 """
 
 from __future__ import annotations
@@ -13,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from o2g_spark.functions import text as X
-from o2g_spark.operators import dedup, similarity
+from o2g_spark.operators import dedup, lsh_index, similarity
 
 
 @pytest.fixture(scope="module")
@@ -113,3 +118,67 @@ def test_quantized_embedding_zero_and_values(spark):
     assert codes == [127, -63, 32]          # floor(x/s + .5), s = 1/127
     assert abs(s - 1.0 / 127.0) < 1e-15
     assert rows[3] == (None, None)
+
+
+def _lambda_depths(df, node: str) -> list[int]:
+    """For every ``node`` expression (Catalyst class name) in the
+    optimized plan, how many HOF lambda bodies enclose it — a node at
+    depth d is re-evaluated per element of d nested loops, except where
+    the loop runs over a one-element let-binding array."""
+    out = []
+
+    def walk(e, depth):
+        name = e.nodeName()
+        if name == node:
+            out.append(depth)
+        kids = e.children()
+        for i in range(kids.size()):  # child 0 of a lambda is its body
+            walk(kids.apply(i), depth + (name == "LambdaFunction" and i == 0))
+
+    def plans(p):
+        yield p
+        for i in range(p.children().size()):
+            yield from plans(p.children().apply(i))
+
+    for p in plans(df._jdf.queryExecution().optimizedPlan()):
+        exprs = p.expressions()
+        for j in range(exprs.size()):
+            walk(exprs.apply(j), 0)
+    return sorted(out)
+
+
+def _shingles(spark):
+    df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    return df.select(X.shingles("text", 3))
+
+
+def _lang_id(spark):
+    df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    return df.select(X.lang_id("text"))
+
+
+def _lsh_bands(spark):
+    sh = spark.createDataFrame([(1, ["a b c"])], "did long, sh array<string>")
+    return lsh_index._band_rows(sh, {"num_hashes": 8, "bands": 4})
+
+
+def _q8(spark):
+    df = spark.createDataFrame([(1, [1.0, -0.5])], "id int, v array<double>")
+    return df.select(similarity.quantized_embedding(F.col("v"), bits=8)[1])
+
+
+@pytest.mark.parametrize("build, node, depths", [
+    # the words pass (regex) once per row, not per shingle position
+    (_shingles, "RegExpReplace", [0]),
+    # lang_id: words once per row; the score max once, not per WHEN
+    # branch (depth 1 = inside the one-element score binding)
+    (_lang_id, "RegExpReplace", [0]),
+    (_lang_id, "ArrayMax", [1]),
+    # lsh banding: the signature's per-shingle md5 (depth 1) stays
+    # outside the per-band lambda, whose own key md5 is depth 2
+    (_lsh_bands, "Md5", [1, 2]),
+    # q8: the O(dim) absmax once per row, not per element
+    (_q8, "ArrayMax", [0]),
+], ids=["shingles", "lang_id_words", "lang_id_max", "lsh_banding", "q8"])
+def test_let_binding_plan_shape(spark, build, node, depths):
+    assert _lambda_depths(build(spark), node) == depths

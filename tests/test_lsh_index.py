@@ -105,8 +105,8 @@ def test_param_mismatch_and_missing_index_raise(spark, corpus, tmp_path):
     # simulate an interrupted rebuild: shingles stage re-committed
     # under different banding params
     ckpt = CheckpointManager(spark, base)
-    _, sh = lsh_index._banded_rows(
-        corpus.filter("doc_id < 100"), "doc_id", "text", 16, 8, 3)
+    sh = lsh_index._shingle_rows(
+        corpus.filter("doc_id < 100"), "doc_id", "text", 3)
     ckpt.run_stage(lsh_index.SHINGLES_STAGE, lambda: sh, key_col="did",
                    force=True,
                    manifest_extra={"num_hashes": 16, "bands": 8,

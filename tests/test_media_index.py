@@ -9,6 +9,7 @@ import os
 import numpy as np
 import pytest
 
+from o2g_spark import kernels
 from o2g_spark.operators import media_dedup, media_index
 from o2g_spark.operators.multimodal import MEDIA_SCHEMA, make_bmp
 from o2g_spark.plans.checkpoint import CheckpointManager
@@ -183,7 +184,7 @@ def test_codec_rev_mismatch_raises(spark, corpus, tmp_path, monkeypatch):
     base = str(tmp_path / "midx_rev")
     media_index.media_index_build(
         spark, base, corpus.filter("media_id < 40"), kind="image")
-    monkeypatch.setattr(media_index, "CODEC_REV", 99)
+    monkeypatch.setattr(kernels, "CODEC_REV", 99)
     with pytest.raises(RuntimeError, match="decode envelope"):
         media_index.media_near_dup_incremental(
             spark, base, corpus.filter("media_id >= 40"))

@@ -135,35 +135,24 @@ def test_pip_thin_zone_budget_break(spark):
     assert [(r["pid"], r["zone_id"]) for r in got] == [(0, 0)]
 
 
-def test_pip_jvm_and_udf_raycast_agree(spark, zones_pdf):
-    """The Arrow-UDF ray cast (default) and the pure-JVM literal-edges
-    variant must produce identical rows — same IEEE formula, two
-    execution paths."""
+def test_pip_join_and_anti_partition_points_with_nulls(spark, zones_pdf):
+    """Every point row lands in exactly one of pip_join and pip_anti —
+    also a matched point whose attribute column is null (a plain `=`
+    anti join keeps it), and a duplicated row."""
     rings = synth.zone_rings(zones_pdf)
-    pts_pdf = _points(2500)
-    pts = spark.createDataFrame(pts_pdf)
-    arrow = (
-        pip.pip_join(pts, rings, res=8).select("pid", "zone_id").toPandas()
-        .sort_values(["pid", "zone_id"]).reset_index(drop=True)
+    clon, clat = synth.HOT_CITIES[0]
+    far = (-170.0, -60.0)
+    for rg in rings.values():
+        assert not geometry.points_in_polygon(
+            np.array([far[0]]), np.array([far[1]]), rg).any()
+    pts = spark.createDataFrame(
+        [(1, clat, clon, None), (2, clat, clon, "a"), (2, clat, clon, "a"),
+         (3, far[1], far[0], None)],
+        "pid long, lat double, lon double, tag string",
     )
-    jvm = (
-        pip.pip_join(pts, rings, res=8, raycast="jvm")
-        .select("pid", "zone_id").toPandas()
-        .sort_values(["pid", "zone_id"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(arrow, jvm)
-
-
-def test_pip_jvm_raycast_plan_has_no_python(spark, zones_pdf):
-    """raycast='jvm': NO Python in the plan at all (for executor
-    environments without Python workers)."""
-    rings = synth.zone_rings(zones_pdf)
-    pts = spark.createDataFrame(_points(100))
-    plan = (
-        pip.pip_join(pts, rings, res=8, raycast="jvm")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    joined = {r.pid for r in pip.pip_join(pts, rings, res=8).collect()}
+    anti = [r.pid for r in pip.pip_anti(pts, rings, res=8).collect()]
+    assert joined == {1, 2} and anti == [3]
 
 
 def test_pip_plan_is_broadcast(spark, zones_pdf):

@@ -175,13 +175,13 @@ def test_codec_rev_mismatch_raises(spark, corpus, tmp_path, monkeypatch):
     """An index built under an older decode envelope must refuse to
     serve: payloads undecodable then may decode now, so the increment
     would silently miss true pairs a full run finds."""
-    from o2g_spark.operators import media_index
+    from o2g_spark import kernels
 
     base = str(tmp_path / "vidx_rev")
     video_index.video_index_build(
         spark, base, corpus.filter("media_id < 20"))
-    # _check_codec_rev lives in media_index and reads ITS module global
-    monkeypatch.setattr(media_index, "CODEC_REV", 99)
+    # the shared index lifecycle reads kernels.CODEC_REV at open time
+    monkeypatch.setattr(kernels, "CODEC_REV", 99)
     with pytest.raises(RuntimeError, match="decode envelope"):
         video_index.video_near_dup_incremental(
             spark, base, corpus.filter("media_id >= 20"))
