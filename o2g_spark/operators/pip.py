@@ -1,42 +1,76 @@
-"""Point-in-polygon join (BASELINE.json B5) — cell covers + ray-cast refine.
+"""Point-in-polygon join (BASELINE.json B5) — sorted-interval lookup +
+ray-cast refine.
 
-Semantics parity with the reference: o2g resolves route members against
-the node dict with an inner join that silently drops dangling refs
-(SURVEY.md §2.A A6–A7 [o2g-PK]); here a point joins a zone iff it lies
-inside the zone polygon, points covered by no zone drop out, and a point
-inside two overlapping zones yields two rows. Exact row counts are the
-graft's correctness bar (BASELINE.json north_rule).
+A point joins a zone iff it lies inside the zone polygon (even-odd
+rule, holes are extra rings); points covered by no zone drop out and a
+point inside two overlapping zones yields two rows (o2g A6–A7 parity,
+SURVEY.md §2.A). Exact row counts are the correctness bar.
 
-Two-phase plan (the "prepared-geometry cell covers" design):
+**Zone index, built once per zone set** (the interval form of *Raster
+Intervals*, SIGMOD 2023). Each zone's adaptive Morton cover has
+*interior* cells (proven inside) and *boundary* cells (candidates).
+With ``R`` the finest resolution of any cover cell, a cell at ``r``
+with Morton part ``m`` is exactly the half-open range
+``[m << 2(R−r), (m+1) << 2(R−r))`` of resolution-R codes: the grid
+index at ``r`` is ``floor(q·2^r)`` of the same quotient ``q``, and
+scaling by a power of two is exact. Ranges merge per (zone, kind), are
+cut at every range end into sorted breakpoints, and a CSR table lists
+each elementary segment's ``(zone_id, is_boundary)`` entries (zones may
+overlap). One broadcast ships it with the rings, memoised per session.
 
-1. **cover join** — points carry a cell id (pure-JVM Morton encode);
-   zones are precomputed into ``(zone_id, cell_id, kind)`` covers.
-   ``kind='interior'`` cells are *proven* inside → accepted with no
-   geometry test. ``kind='boundary'`` cells are candidates.
-   The cover table is tiny relative to points (≈ zones × cells/zone) →
-   broadcast hash join, no shuffle of the point side at all.
-2. **refine** — boundary candidates get an exact even-odd ray cast in
-   one Arrow pandas UDF whose zone geometry arrives via a Spark
-   broadcast variable (zones are a dimension; the candidate stream
-   stays distributed and never collects to the driver).
-
-Scale notes (100 TB): phase 1 is a map-only stage over the point table;
-phase 2 touches only the boundary sliver (fraction shrinks as cover
-``res`` rises — adaptive: pick res so interior cells dominate). For
-zone sets too large to broadcast, pass ``broadcast_covers=False`` to
-fall back to a shuffle join on ``cell_id`` — same semantics.
+**One Arrow UDF per point.** The JVM computes the resolution-R code
+(``cellfns.cell_encode``); an iterator Arrow UDF finds its segment with
+one ``searchsorted``, accepts interior entries, ray-casts boundary ones
+and returns the zone ids as ``array<bigint>``. ``pip_join`` explodes
+them; ``pip_anti`` keeps the points whose list is empty, so each point
+row lands in exactly one of the two. The plan is map-only over the
+points: no join, no exchange; only the boundary sliver pays geometry.
 """
 
 from __future__ import annotations
 
+import hashlib
+from typing import Iterator, Tuple
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import session
 from ..functions import cellfns
-from ..kernels import geometry
+from ..kernels import cells, geometry
+
+_MORTON_MASK = (1 << 58) - 1
+
+
+def _cover_arrays(
+    rings_by_zone: dict[int, list[np.ndarray]],
+    res: int,
+    base_res: int | None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(zone_id, cell_id, is_boundary) arrays of every zone's adaptive
+    cover — the one cover computation behind both the index and
+    :func:`zone_covers`."""
+    if base_res is None:
+        base_res = max(2, res - 5)
+    zids, cids = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    bnd = [np.empty(0, bool)]
+    for zid, rings in rings_by_zone.items():
+        interior, boundary = geometry.polygon_cover_adaptive(rings, base_res, res)
+        zids.append(np.full(len(interior) + len(boundary), int(zid), np.int64))
+        cids += [interior, boundary]
+        bnd += [np.zeros(len(interior), bool), np.ones(len(boundary), bool)]
+    return np.concatenate(zids), np.concatenate(cids), np.concatenate(bnd)
+
+
+def _expand(start: np.ndarray, cnt: np.ndarray):
+    """CSR expansion: for each i, ``cnt[i]`` consecutive positions from
+    ``start[i]``. Returns ``(owner i, position)`` per expanded entry."""
+    pos = np.repeat(start - (np.cumsum(cnt) - cnt), cnt) + np.arange(cnt.sum())
+    return np.repeat(np.arange(len(cnt)), cnt), pos
 
 
 def zone_covers(
@@ -45,82 +79,121 @@ def zone_covers(
     res: int,
     base_res: int | None = None,
 ) -> tuple[DataFrame, list[int]]:
-    """Precompute hierarchical (zone_id, cell_id, kind) covers
-    driver-side (numpy) and the sorted list of resolutions present.
-
-    Zones are a dimension table (SURVEY.md §4.3); the cover runs once
-    per job and broadcasts. ``kind`` ∈ {interior, boundary}; interior
-    cells are MIXED resolution (coarse in the fat middle, fine near
-    the boundary — geometry.polygon_cover_adaptive). Boundary cells
-    usually sit at ``res`` but the refine loop's boundary_budget can
-    stop a zone COARSER than ``res`` — so the returned resolution list
-    is derived from the actual cell ids of BOTH kinds, never assumed.
-    (Assuming ``res`` silently dropped every point of a tile-thin zone
-    whose boundary stopped at a resolution no interior cell shared.)
-    """
-    if base_res is None:
-        base_res = max(2, res - 5)
-    zids, cids, kinds = [], [], []
-    res_seen: set[int] = set()
-    for zid, rings in rings_by_zone.items():
-        interior, boundary = geometry.polygon_cover_adaptive(rings, base_res, res)
-        n_i, n_b = len(interior), len(boundary)
-        zids.append(np.full(n_i + n_b, int(zid), dtype=np.int64))
-        cids.append(interior)
-        cids.append(boundary)
-        kinds.append(np.concatenate([np.zeros(n_i, bool), np.ones(n_b, bool)]))
-        res_seen.update(np.unique(geometry.cells.cell_res(interior)).tolist())
-        if n_b:
-            res_seen.update(np.unique(geometry.cells.cell_res(boundary)).tolist())
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "zone_id": np.concatenate(zids) if zids else np.empty(0, np.int64),
-            "cell_id": np.concatenate(cids) if cids else np.empty(0, np.int64),
-            "kind": np.where(
-                np.concatenate(kinds) if kinds else np.empty(0, bool),
-                "boundary", "interior",
-            ),
-        }
-    )
-    # Arrow path: ~10× faster than a python-tuple createDataFrame for
-    # the ~10⁵-row covers of realistic zone sets
+    """The (zone_id, cell_id, kind) covers ``pip_join`` indexes, as a
+    DataFrame, and the sorted resolutions of their cells. Interior cells
+    are mixed-resolution, and the boundary budget can stop a zone's
+    boundary coarser than ``res``, so the list comes from the cell ids."""
+    zids, cids, bnd = _cover_arrays(rings_by_zone, res, base_res)
+    kind = np.where(bnd, "boundary", "interior")
+    pdf = pd.DataFrame({"zone_id": zids, "cell_id": cids, "kind": kind})
     return (
         spark.createDataFrame(pdf, "zone_id long, cell_id long, kind string"),
-        sorted(res_seen),
+        sorted(np.unique(cells.cell_res(cids)).tolist()),
     )
 
 
-def _raycast_udf(spark: SparkSession, rings_by_zone: dict[int, list[np.ndarray]]):
-    """BooleanType Arrow UDF: exact PIP for (zone_id, lon, lat) batches.
+def _interval_index(zids: np.ndarray, cids: np.ndarray, bnd: np.ndarray):
+    """Covers → ``(R, bp, indptr, ent_zone, ent_bnd)``.
 
-    Zone geometry ships once per executor via a broadcast variable
-    (closures would re-pickle per task — guide §Pitfalls). Inside a
-    batch, points are grouped per zone and ray-cast vectorized.
+    ``bp`` are the sorted unique range ends in resolution-R Morton
+    space. A code ``c`` looks up ``j = searchsorted(bp, c, 'right')``;
+    its entries are ``ent_*[indptr[j]:indptr[j+1]]`` (``j = 0`` and
+    ``j = len(bp)`` lie outside every range and have none).
     """
-    bc = spark.sparkContext.broadcast(
-        {int(z): [np.asarray(r, dtype=np.float64) for r in rings] for z, rings in rings_by_zone.items()}
+    res = cells.cell_res(cids)
+    R = int(res.max()) if len(cids) else 0
+    shift = 2 * (R - res)
+    morton = cids & _MORTON_MASK
+    lo, hi = morton << shift, (morton + 1) << shift
+
+    # merge adjacent ranges of one (zone, kind); a zone's cells are disjoint
+    order = np.lexsort((lo, bnd, zids))
+    zids, bnd, lo, hi = zids[order], bnd[order], lo[order], hi[order]
+    first = np.ones(len(lo), bool)
+    first[1:] = (zids[1:] != zids[:-1]) | (bnd[1:] != bnd[:-1]) | (lo[1:] != hi[:-1])
+    last = np.ones(len(lo), bool)
+    last[:-1] = first[1:]
+    zids, bnd, lo, hi = zids[first], bnd[first], lo[first], hi[last]
+
+    # cut every range at every breakpoint: range i covers lookups
+    # j in [s_i, e_i), one CSR entry per (segment, range)
+    bp = np.unique(np.concatenate([lo, hi]))
+    s = np.searchsorted(bp, lo, "right")
+    rng, seg = _expand(s, np.searchsorted(bp, hi, "right") - s)
+    by_seg = np.argsort(seg, kind="stable")
+    indptr = np.zeros(len(bp) + 2, np.int64)
+    np.cumsum(np.bincount(seg, minlength=len(bp) + 1), out=indptr[1:])
+    return R, bp, indptr, zids[rng[by_seg]], bnd[rng[by_seg]]
+
+
+def _digest(rings_by_zone, res: int, base_res: int | None) -> str:
+    h = hashlib.sha1(repr((res, base_res)).encode())
+    for zid, rings in rings_by_zone.items():
+        h.update(repr((int(zid), len(rings))).encode())
+        for ring in rings:
+            r = np.ascontiguousarray(ring, dtype=np.float64)
+            h.update(repr(r.shape).encode() + r.tobytes())
+    return h.hexdigest()
+
+
+def _zone_index(
+    spark: SparkSession,
+    rings_by_zone: dict[int, list[np.ndarray]],
+    res: int,
+    base_res: int | None,
+):
+    """``(R, broadcast)`` for a zone set, built once per (session, zone
+    set). The broadcast holds ``(bp, indptr, ent_zone, ent_bnd, rings)``."""
+
+    def build():
+        R, *index = _interval_index(*_cover_arrays(rings_by_zone, res, base_res))
+        rings = {
+            int(z): [np.asarray(r, dtype=np.float64) for r in rs]
+            for z, rs in rings_by_zone.items()
+        }
+        return R, spark.sparkContext.broadcast((*index, rings))
+
+    key = ("pip.zone_index", _digest(rings_by_zone, res, base_res))
+    return session.session_memo(spark, key, build)
+
+
+def _zones_udf(bc):
+    """Iterator Arrow UDF: (code, lon, lat) → array<bigint> of the zones
+    containing each point (empty for a null code)."""
+
+    def pip_zones(
+        batches: Iterator[Tuple[pa.Array, pa.Array, pa.Array]],
+    ) -> Iterator[pa.Array]:
+        bp, indptr, ent_zone, ent_bnd, rings = bc.value  # once per task
+        for code, lon, lat in batches:
+            n = len(code)
+            valid = code.is_valid().to_numpy(zero_copy_only=False)
+            c = code.fill_null(0).to_numpy() & _MORTON_MASK
+            j = np.where(valid, np.searchsorted(bp, c, "right"), 0)
+            row, ent = _expand(indptr[j], indptr[j + 1] - indptr[j])
+            zone, keep = ent_zone[ent], ~ent_bnd[ent]
+            refine = np.flatnonzero(ent_bnd[ent])
+            if len(refine):
+                x = lon.fill_null(np.nan).to_numpy(zero_copy_only=False)
+                y = lat.fill_null(np.nan).to_numpy(zero_copy_only=False)
+                rz = zone[refine]
+                for z in np.unique(rz):
+                    idx = refine[rz == z]
+                    pr = row[idx]
+                    keep[idx] = geometry.points_in_polygon(x[pr], y[pr], rings[int(z)])
+            offsets = np.zeros(n + 1, np.int32)
+            np.cumsum(np.bincount(row[keep], minlength=n), out=offsets[1:])
+            yield pa.ListArray.from_arrays(pa.array(offsets), pa.array(zone[keep]))
+
+    return F.arrow_udf(pip_zones, T.ArrayType(T.LongType()))
+
+
+def _with_zones(points, rings_by_zone, res, base_res, lat_col, lon_col):
+    R, bc = _zone_index(points.sparkSession, rings_by_zone, res, base_res)
+    zones = _zones_udf(bc)(
+        cellfns.cell_encode(lat_col, lon_col, R), F.col(lon_col), F.col(lat_col)
     )
-
-    @F.pandas_udf(T.BooleanType())
-    def _inside(zone_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        rings = bc.value
-        out = np.zeros(len(zone_id), dtype=bool)
-        # null zone_id = caller pre-masked the row out (interior hit):
-        # skip it for free instead of ray-casting
-        valid = zone_id.notna().to_numpy()
-        if not valid.any():
-            return pd.Series(out)
-        zid_arr = zone_id.to_numpy(dtype=np.float64, na_value=np.nan)
-        lon_arr = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lat_arr = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        for z in pd.unique(zid_arr[valid]):
-            m = valid & (zid_arr == z)
-            out[m] = geometry.points_in_polygon(lon_arr[m], lat_arr[m], rings[int(z)])
-        return pd.Series(out)
-
-    return _inside
+    return points.withColumn("__zones", zones)
 
 
 def pip_join(
@@ -130,64 +203,18 @@ def pip_join(
     base_res: int | None = None,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    broadcast_covers: bool = True,
 ) -> DataFrame:
     """points ⋈ zones (point-in-polygon). Output: point columns + zone_id.
 
-    Exact (not approximate): interior-cell hits skip geometry, boundary
-    hits are ray-cast. Deterministic and partition-invariant — the
-    kernel is a pure per-row function.
-
-    Plan shape: the point side computes its cell id at each resolution
-    the (mixed-res) covers contain — a small literal array, exploded —
-    then ONE broadcast hash equi-join on cell_id. Cell ids embed their
-    resolution, so cross-res collisions are impossible and a point can
-    hit at most one cover cell per zone. Map-only over the point table.
-    Catalyst hoists the refine UDF over every joined row, so its inputs
-    are null-masked for interior hits — only the boundary sliver pays
-    actual ray-cast work.
+    Exact, deterministic and partition-invariant (a pure per-row
+    kernel). ``res`` is the finest cover resolution: it trades index
+    size against ray-cast work and never changes the row set.
     """
-    spark = points.sparkSession
-    covers, res_list = zone_covers(spark, rings_by_zone, res, base_res)
-    cov = F.broadcast(covers) if broadcast_covers else covers
-
-    cell_arr = F.array(
-        *[cellfns.cell_encode(lat_col, lon_col, r) for r in res_list]
+    return (
+        _with_zones(points, rings_by_zone, res, base_res, lat_col, lon_col)
+        .withColumn("zone_id", F.explode("__zones"))
+        .select(*points.columns, "zone_id")
     )
-    # materialize the array in a Project BEFORE exploding: GenerateExec
-    # evaluates its generator expression interpreted (no subexpression
-    # elimination), which makes explode(computed-array) ~20× slower
-    # than project-then-explode (measured on the Morton encode tree)
-    pts = (
-        points.withColumn("__cells", cell_arr)
-        .withColumn("__cell", F.explode("__cells"))
-        .drop("__cells")
-    )
-    joined = pts.join(cov, pts["__cell"] == cov["cell_id"], "inner")
-
-    # single pass: interior hits accept on the flag, boundary hits get
-    # the exact ray cast. (A union of two filtered branches would
-    # re-execute the whole explode+join per branch — measured 2×; the
-    # point stream itself, e.g. a regex geotag extraction, is usually
-    # the expensive part.) Zone geometry ships once per executor as a
-    # Spark broadcast; Catalyst hoists the pandas UDF out of the OR
-    # into an ArrowEvalPython over EVERY joined row, so the inputs are
-    # pre-masked to null for interior hits — Python then skips them and
-    # only the boundary sliver pays the (numpy-vectorized) ray cast.
-    # (A pure-JVM unrolled-edge refine measured 2× slower: 8.6 s vs
-    # 3.8 s at 64M pages.)
-    inside = _raycast_udf(spark, rings_by_zone)
-    is_boundary = F.col("kind") == "boundary"
-    keep = (F.col("kind") == "interior") | F.coalesce(
-        inside(
-            F.when(is_boundary, F.col("zone_id")),
-            F.when(is_boundary, F.col(lon_col)),
-            F.when(is_boundary, F.col(lat_col)),
-        ),
-        F.lit(False),
-    )
-    out_cols = [c for c in points.columns] + ["zone_id"]
-    return joined.filter(keep).select(*out_cols)
 
 
 def pip_anti(
@@ -197,14 +224,11 @@ def pip_anti(
     lat_col: str = "lat",
     lon_col: str = "lon",
 ) -> DataFrame:
-    """Points inside NO zone — the dangling-ref audit (o2g A7 parity:
-    members whose ref resolves nowhere are dropped, and the audit path
-    counts them via an anti join). The anti join is null-safe on every
-    point column: a matched point with a null attribute must not
-    survive it."""
-    cols = points.columns
-    matched = pip_join(
-        points, rings_by_zone, res, lat_col=lat_col, lon_col=lon_col
-    ).select(*cols).toDF(*[f"__m{i}" for i in range(len(cols))])
-    on = [points[c].eqNullSafe(matched[f"__m{i}"]) for i, c in enumerate(cols)]
-    return points.join(matched, on=on, how="left_anti")
+    """Points inside NO zone — the dangling-ref audit (o2g A7 parity).
+    The row-by-row complement of :func:`pip_join`, including rows with
+    null attributes or coordinates and duplicates."""
+    return (
+        _with_zones(points, rings_by_zone, res, None, lat_col, lon_col)
+        .filter(F.size("__zones") == 0)
+        .select(*points.columns)
+    )

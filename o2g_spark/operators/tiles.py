@@ -2,9 +2,8 @@
 
 Per-page tile assignment is **pure column math** (Web-Mercator floor
 transform, ``o2g_spark.functions.geo``) — no UDF, fully inside
-whole-stage codegen. The raster→vector direction (which zones cover a
-tile / which zone claims a page's tile) reuses the prepared-cover +
-ray-cast-refine design from the PIP operator, run in tile space.
+whole-stage codegen. The raster→vector direction (which zones claim a
+page's tile) is ``pip.pip_join`` followed by :func:`assign_tiles`.
 
 Reference parity: o2g assigns each stop to exactly the routes whose
 relations reference it (SURVEY.md §2.A A6 [o2g-PK]); the graft's
@@ -14,13 +13,10 @@ per-page tile assignment must be exact and partition-invariant
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
-from ..kernels import geometry
-from .pip import _raycast_udf
 
 
 def assign_tiles(
@@ -35,56 +31,6 @@ def assign_tiles(
         .withColumn("tile_y", geo.tile_y(lat_col, zoom))
         .withColumn("tile_id", geo.tile_id(lat_col, lon_col, zoom))
     )
-
-
-def tile_zone_cover(
-    spark: SparkSession,
-    rings_by_zone: dict[int, list[np.ndarray]],
-    zoom: int,
-) -> DataFrame:
-    """(zone_id, tile_id, kind) cover table in the Mercator tile grid.
-
-    Driver-side numpy per zone (zones are a dimension table), then
-    broadcast by callers. kind ∈ {interior, boundary}.
-    """
-    rows = []
-    for zid, rings in rings_by_zone.items():
-        interior, boundary = geometry.tile_cover(rings, zoom)
-        rows.extend((int(zid), int(t), "interior") for t in interior)
-        rows.extend((int(zid), int(t), "boundary") for t in boundary)
-    return spark.createDataFrame(rows, "zone_id long, tile_id long, kind string")
-
-
-def tile_pip_join(
-    points: DataFrame,
-    rings_by_zone: dict[int, list[np.ndarray]],
-    zoom: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    broadcast_covers: bool = True,
-) -> DataFrame:
-    """points ⋈ zones via the raster grid: tile-cover join + ray-cast
-    refine of boundary tiles. Identical result set to ``pip_join`` (the
-    two paths cross-check each other in tests); exercised as the
-    raster→vector direction of B8.
-
-    Output: point columns + tile_x, tile_y, tile_id, zone_id.
-    """
-    spark = points.sparkSession
-    covers = tile_zone_cover(spark, rings_by_zone, zoom)
-    cov = F.broadcast(covers) if broadcast_covers else covers
-
-    pts = assign_tiles(points, zoom, lat_col, lon_col)
-    joined = pts.join(cov, "tile_id", "inner")
-
-    # single-pass accept/refine (see pip.pip_join — a 2-branch union
-    # would re-execute the join per branch)
-    inside = _raycast_udf(spark, rings_by_zone)
-    keep = (F.col("kind") == "interior") | inside(
-        F.col("zone_id"), F.col(lon_col), F.col(lat_col)
-    )
-    out_cols = points.columns + ["tile_x", "tile_y", "tile_id", "zone_id"]
-    return joined.filter(keep).select(*out_cols)
 
 
 def tile_density(

@@ -11,6 +11,7 @@ import os
 import tempfile
 import threading
 import zipfile
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
@@ -103,6 +104,8 @@ def get_spark(
 # ------------------------------------------------- bounded operator caches
 
 _live_caches: dict = {}
+_memo: OrderedDict = OrderedDict()
+_MEMO_MAX = 4
 _caches_lock = threading.Lock()
 _ALL = object()  # clear_caches sentinel: every session's entries
 
@@ -176,12 +179,31 @@ def cache_latest(key: str, df):
     return df
 
 
+def session_memo(spark: SparkSession, key, build):
+    """``build()`` once per (session, key), e.g. a broadcast index; keeps
+    the ``_MEMO_MAX`` most recently used values. An evicted value is only
+    dropped, never destroyed: a lazily built frame may still use it."""
+    sid = _sid(spark)
+    if sid is None:
+        return build()
+    skey = (sid, key)
+    with _caches_lock:
+        if skey in _memo:
+            _memo.move_to_end(skey)
+            return _memo[skey]
+        value = _memo[skey] = build()
+        while len(_memo) > _MEMO_MAX:
+            _memo.popitem(last=False)
+    return value
+
+
 def clear_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist every registry entry (or only the given session's) —
-    the explicit teardown hook for long-lived processes. Returns the
-    number of caches released. A session whose id can no longer be read
-    (already stopped) clears nothing — NOT everything: other live
-    sessions' caches must survive its teardown."""
+    """Unpersist every registry entry (or only the given session's) and
+    drop its :func:`session_memo` values — the explicit teardown hook for
+    long-lived processes. Returns the number of caches released. A
+    session whose id can no longer be read (already stopped) clears
+    nothing — NOT everything: other live sessions' caches must survive
+    its teardown."""
     if spark is None:
         sid = _ALL
     else:
@@ -193,6 +215,8 @@ def clear_caches(spark: SparkSession | None = None) -> int:
             k for k in _live_caches if sid is _ALL or k[0] == sid
         ]
         frames = [_live_caches.pop(k) for k in victims]
+        for k in [k for k in _memo if sid is _ALL or k[0] == sid]:
+            del _memo[k]
     for f in frames:
         try:
             f.unpersist()

@@ -8,7 +8,7 @@ stage scale: a planted worst case (one res-9 cell holding 50% of all
 geo-tagged pages — synth_dist.one_hot_frac) is pushed through the
 per-cell stages with and without each mitigation:
 
-  A. map stage (the pip cover join + Arrow ray-cast refine, map-only
+  A. map stage (the pip interval lookup + ray-cast refine, map-only
      over the point side): input partitioned naively BY CELL (one task
      owns half the crawl) vs salted_repartition (hot cell spread over
      `--buckets` tasks). Records the max-partition-row histogram bound

@@ -4,6 +4,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from o2g_spark.functions import cellfns
 from o2g_spark.kernels import geometry
 from o2g_spark.operators import pip
 from o2g_spark.sources import synth
@@ -58,11 +59,6 @@ def test_pip_res_invariance(spark, zones_pdf):
     """Row set must not depend on cover resolution (correctness knob only)."""
     _run_pip(spark, zones_pdf, res=6, n=3000)
     _run_pip(spark, zones_pdf, res=10, n=3000)
-
-
-def test_pip_shuffle_join_variant(spark, zones_pdf):
-    """broadcast_covers=False (shuffle join) must give identical rows."""
-    _run_pip(spark, zones_pdf, res=8, n=3000, broadcast_covers=False)
 
 
 def test_pip_overlapping_zones_two_rows(spark, zones_pdf):
@@ -138,7 +134,7 @@ def test_pip_thin_zone_budget_break(spark):
 def test_pip_join_and_anti_partition_points_with_nulls(spark, zones_pdf):
     """Every point row lands in exactly one of pip_join and pip_anti —
     also a matched point whose attribute column is null (a plain `=`
-    anti join keeps it), and a duplicated row."""
+    anti join keeps it), a duplicated row, and null coordinates."""
     rings = synth.zone_rings(zones_pdf)
     clon, clat = synth.HOT_CITIES[0]
     far = (-170.0, -60.0)
@@ -147,21 +143,139 @@ def test_pip_join_and_anti_partition_points_with_nulls(spark, zones_pdf):
             np.array([far[0]]), np.array([far[1]]), rg).any()
     pts = spark.createDataFrame(
         [(1, clat, clon, None), (2, clat, clon, "a"), (2, clat, clon, "a"),
-         (3, far[1], far[0], None)],
+         (3, far[1], far[0], None), (4, None, None, "b"), (5, None, clon, None),
+         (6, clat, None, None)],
         "pid long, lat double, lon double, tag string",
     )
     joined = {r.pid for r in pip.pip_join(pts, rings, res=8).collect()}
-    anti = [r.pid for r in pip.pip_anti(pts, rings, res=8).collect()]
-    assert joined == {1, 2} and anti == [3]
+    anti = sorted(r.pid for r in pip.pip_anti(pts, rings, res=8).collect())
+    assert joined == {1, 2} and anti == [3, 4, 5, 6]
 
 
-def test_pip_plan_is_broadcast(spark, zones_pdf):
-    """The cover join must be a broadcast hash join, not a shuffle."""
+def test_pip_plan_is_map_only(spark, zones_pdf):
+    """pip_join and pip_anti are map-only over the points: no join, no
+    exchange, exactly one ArrowEvalPython (below the explode for
+    pip_join), and the optimized plan calls the pip UDF once — no
+    inferred pre-explode Filter re-evaluating it (the
+    InferFiltersFromGenerate exclusion in session.py)."""
     rings = synth.zone_rings(zones_pdf)
     pts = spark.createDataFrame(_points(100))
-    plan = (
-        pip.pip_join(pts, rings, res=8)
-        ._jdf.queryExecution().executedPlan().toString()
+    for df, below in (
+        (pip.pip_join(pts, rings, res=8), "Generate"),
+        (pip.pip_anti(pts, rings, res=8), "Filter"),
+    ):
+        qe = df._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        assert "Join" not in plan and "Exchange" not in plan
+        assert plan.count("ArrowEvalPython") == 1
+        assert plan.index(below) < plan.index("ArrowEvalPython")
+        assert qe.optimizedPlan().toString().count("pip_zones(") == 1
+
+
+def test_cell_encode_hierarchy(spark):
+    """The interval lookup's exactness argument: for every r <= R the
+    resolution-r code is the resolution-R code shifted right by 2(R-r)
+    with r in the resolution bits — at the clamped world edges, exactly
+    on (and one ulp below) resolution-R cell edges, and for NaN and null
+    coordinates."""
+    R = 14
+    n = 1 << R
+    k = rng.integers(0, n, 40).astype(np.float64)
+    on_lon = k * (360.0 / n) - 180.0
+    on_lat = k * (180.0 / n) - 90.0
+    lon = np.concatenate([
+        rng.uniform(-180, 180, 200), [-180.0, 180.0, 180.0, -180.0, 0.0],
+        on_lon, np.nextafter(on_lon, -np.inf), [np.nan, 1.0, np.nan],
+    ])
+    lat = np.concatenate([
+        rng.uniform(-90, 90, 200), [-90.0, 90.0, -90.0, 90.0, 0.0],
+        on_lat, np.nextafter(on_lat, -np.inf), [1.0, np.nan, np.nan],
+    ])
+    rows = [(float(a), float(b)) for a, b in zip(lat, lon)]
+    rows += [(None, 1.0), (1.0, None), (None, None)]
+    df = spark.createDataFrame(rows, "lat double, lon double")
+    got = df.select(
+        *[cellfns.cell_encode("lat", "lon", r).alias(f"r{r}") for r in range(R + 1)]
+    ).collect()
+    assert len(got) == len(rows)
+    for row in got:
+        top = row[f"r{R}"]
+        for r in range(R + 1):
+            exp = None if top is None else (
+                ((top & ((1 << 58) - 1)) >> (2 * (R - r))) | (r << 58))
+            assert row[f"r{r}"] == exp, (row, r)
+
+
+def _hole_and_triangle_rings():
+    outer = np.array([(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0)])
+    hole = np.array([(1.0, 1.0), (3.0, 1.0), (3.0, 3.0), (1.0, 3.0)])
+    tri = np.array([(3.0, 3.0), (6.0, 3.5), (3.5, 6.0), (3.0, 3.0)])
+    return {100: [outer, hole], 101: [tri]}
+
+
+def test_pip_degenerate_inputs_vs_numpy(spark, zones_pdf):
+    """pip_join equals the numpy ray cast and pip_anti is its exact
+    complement on points at every vertex and on every edge, inside and
+    on holes, in the overlapping hot-city zones, and duplicated."""
+    rings = {**synth.zone_rings(zones_pdf), **_hole_and_triangle_rings()}
+    lon, lat = [], []
+    for rg in rings.values():
+        for ring in rg:
+            v = np.asarray(ring, dtype=np.float64)
+            w = np.roll(v, -1, axis=0)
+            for t in (0.0, 0.25, 0.5):
+                p = v + t * (w - v)
+                lon += p[:, 0].tolist()
+                lat += p[:, 1].tolist()
+    for clon, clat in synth.HOT_CITIES:
+        lon += (clon + rng.uniform(-0.12, 0.12, 300)).tolist()
+        lat += (clat + rng.uniform(-0.12, 0.12, 300)).tolist()
+    lon += [2.0, 0.5, 2.0] + lon[:50]  # hole middle, ring band, duplicates
+    lat += [2.0, 0.5, 2.0] + lat[:50]
+    pdf = pd.DataFrame({"pid": np.arange(len(lon)), "lat": lat, "lon": lon})
+    exp = _brute_force(pdf, rings)
+    for res in (10, 14):
+        got = (
+            pip.pip_join(spark.createDataFrame(pdf), rings, res=res)
+            .select("pid", "zone_id").toPandas()
+            .sort_values(["pid", "zone_id"]).reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+        anti = pip.pip_anti(spark.createDataFrame(pdf), rings, res=res)
+        assert {r.pid for r in anti.collect()} == set(pdf.pid) - set(exp.pid)
+
+
+def test_pip_empty_zone_set(spark):
+    pts = spark.createDataFrame(_points(50))
+    assert pip.pip_join(pts, {}).count() == 0
+    assert pip.pip_anti(pts, {}).count() == 50
+
+
+def test_zone_index_built_once_per_zone_set(spark, zones_pdf):
+    """Same rings build once; a changed ring or res rebuilds; a frame
+    built before its index is evicted still collects correctly after
+    five other zone sets; clear_caches drops the session's entries."""
+    from o2g_spark import session
+
+    rings = synth.zone_rings(zones_pdf)
+    idx = pip._zone_index(spark, rings, 8, None)
+    assert pip._zone_index(spark, dict(rings), 8, None) is idx
+    moved = {**rings, 0: [np.asarray(rings[0][0]) + 0.5]}
+    assert pip._zone_index(spark, moved, 8, None) is not idx
+    assert pip._zone_index(spark, rings, 9, None) is not idx
+
+    pts_pdf = _points(1500)
+    pts = spark.createDataFrame(pts_pdf)
+    df = pip.pip_join(pts, rings, res=8)
+    for k in range(1, 6):
+        other = {z: [np.asarray(r) + 0.01 * k for r in rg] for z, rg in rings.items()}
+        pip._zone_index(spark, other, 8, None)
+    got = (
+        df.select("pid", "zone_id").toPandas()
+        .sort_values(["pid", "zone_id"]).reset_index(drop=True)
     )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    pd.testing.assert_frame_equal(got, _brute_force(pts_pdf, rings), check_dtype=False)
+    rebuilt = pip._zone_index(spark, rings, 8, None)
+    assert rebuilt is not idx
+    session.clear_caches(spark)
+    assert pip._zone_index(spark, rings, 8, None) is not rebuilt

@@ -46,11 +46,15 @@ def test_dim_joins_are_broadcast(spark, sf_dir):
 
 
 def test_pip_join_no_shuffle_on_point_side(spark, sf_dir):
-    """The PIP cover join must be map-only over the points: broadcast
-    hash join, no Exchange between the parquet scan and the join."""
-    plan = _plan(E.queries()["pip_rows"](spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    """PIP is map-only over the points: no join and no Exchange between
+    the parquet scan and the output, one ArrowEvalPython below the
+    explode, and the pip UDF called once in the optimized plan."""
+    df = E.queries()["pip_rows"](spark, sf_dir)
+    plan = _plan(df)
+    assert "Join" not in plan and "Exchange" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.index("Generate") < plan.index("ArrowEvalPython")
+    assert _optimized(df).count("pip_zones(") == 1
 
 
 def test_whole_stage_codegen_hot_path(spark, sf_dir):

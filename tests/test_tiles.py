@@ -74,20 +74,33 @@ def test_tile_cover_classification():
             assert not ins, "point in excluded tile must be outside polygon"
 
 
-def test_tile_pip_equals_cell_pip(spark, pages_truth, zones_pdf):
-    """The raster path and the cell-index path agree exactly."""
+def test_tiled_pip_matches_numpy(spark, pages_truth, zones_pdf):
+    """The raster→vector direction (pip_join, then assign_tiles) equals
+    a numpy brute force: ray cast per zone, Mercator tile floor."""
     _, truth = pages_truth
-    pts = spark.createDataFrame(truth[["url", "lat", "lon"]].drop_duplicates())
+    pdf = truth[["url", "lat", "lon"]].drop_duplicates()
     rings = synth.zone_rings(zones_pdf)
-    a = {
-        (r.url, r.lat, r.lon, r.zone_id)
-        for r in pip.pip_join(pts, rings, res=9).collect()
-    }
-    b = {
-        (r.url, r.lat, r.lon, r.zone_id)
-        for r in tiles.tile_pip_join(pts, rings, zoom=9).collect()
-    }
-    assert a == b
+    zoom = 9
+    got = sorted(
+        (r.url, r.lat, r.lon, r.zone_id, r.tile_x, r.tile_y, r.tile_id)
+        for r in tiles.assign_tiles(
+            pip.pip_join(spark.createDataFrame(pdf), rings, res=9), zoom
+        ).collect()
+    )
+    lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+    n = 1 << zoom
+    tx, ty = geometry.lonlat_to_tilef(lon, lat, zoom)
+    tx = np.clip(np.floor(tx).astype(np.int64), 0, n - 1)
+    ty = np.clip(np.floor(ty).astype(np.int64), 0, n - 1)
+    exp = sorted(
+        (u, la, lo, int(z), int(x), int(y), (zoom << 58) | (int(x) << 29) | int(y))
+        for z, rg in rings.items()
+        for u, la, lo, x, y, inside in zip(
+            pdf["url"], lat, lon, tx, ty, geometry.points_in_polygon(lon, lat, rg)
+        )
+        if inside
+    )
+    assert got and got == exp
 
 
 def test_tile_density_counts(spark):
