@@ -20,3 +20,9 @@ Python appears only inside Arrow-vectorized pandas UDFs.
 """
 
 __version__ = "0.1.0"
+
+from o2g_spark.session import install_worker_import_guard
+
+# every engine UDF pickles references into this package, so each Python
+# worker installs the guard on its first task (a no-op on the driver)
+install_worker_import_guard()

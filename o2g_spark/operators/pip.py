@@ -190,9 +190,12 @@ def _zones_udf(bc):
 
 def _with_zones(points, rings_by_zone, res, base_res, lat_col, lon_col):
     R, bc = _zone_index(points.sparkSession, rings_by_zone, res, base_res)
-    zones = _zones_udf(bc)(
-        cellfns.cell_encode(lat_col, lon_col, R), F.col(lon_col), F.col(lat_col)
-    )
+    lat, lon = F.col(lat_col), F.col(lon_col)
+    # cell_encode clamps a null or NaN coordinate onto the grid edge;
+    # such a point is in no zone, so it gets a null code (no zones)
+    located = lat.isNotNull() & lon.isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
+    code = F.when(located, cellfns.cell_encode(lat, lon, R))
+    zones = _zones_udf(bc)(code, lon, lat)
     return points.withColumn("__zones", zones)
 
 

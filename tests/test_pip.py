@@ -152,6 +152,28 @@ def test_pip_join_and_anti_partition_points_with_nulls(spark, zones_pdf):
     assert joined == {1, 2} and anti == [3, 4, 5, 6]
 
 
+def test_pip_null_and_nan_coordinates_in_no_zone(spark):
+    """cell_encode clamps a null or NaN coordinate to grid index 0, so
+    unchecked such a point looks up the cell at lat -90 / lon -180. A
+    zone covering that corner must still not take it in: the numpy ray
+    cast puts every such point outside."""
+    ring = np.array([(-180.5, -90.5), (180.5, -90.5), (180.5, -60.0), (-180.5, -60.0)])
+    rings = {7: [ring]}
+    pts = spark.createDataFrame(
+        [(1, None, 1.0), (2, float("nan"), 1.0), (3, -70.0, None),
+         (4, 1.0, float("nan")), (5, None, None), (6, -70.0, 1.0)],
+        "pid long, lat double, lon double",
+    )
+    pdf = pts.toPandas()
+    inside = geometry.points_in_polygon(
+        pdf["lon"].to_numpy(float), pdf["lat"].to_numpy(float), [ring])
+    assert set(pdf.pid[inside]) == {6}
+    for res in (8, 14):
+        joined = [(r.pid, r.zone_id) for r in pip.pip_join(pts, rings, res=res).collect()]
+        anti = sorted(r.pid for r in pip.pip_anti(pts, rings, res=res).collect())
+        assert joined == [(6, 7)] and anti == [1, 2, 3, 4, 5], res
+
+
 def test_pip_plan_is_map_only(spark, zones_pdf):
     """pip_join and pip_anti are map-only over the points: no join, no
     exchange, exactly one ArrowEvalPython (below the explode for

@@ -1,8 +1,19 @@
-"""cache_latest registry: session-keyed, locked, clearable."""
+"""cache_latest registry: session-keyed, locked, clearable; the
+worker-side zip invalidation guard."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from o2g_spark import session as S
+from o2g_spark.operators import pip
+from o2g_spark.sources import synth
 
 
 def _is_cached(df) -> bool:
@@ -79,3 +90,86 @@ def test_cache_latest_isolates_newsession(spark):
     assert S.clear_caches(s2) == 1
     assert _is_cached(a1) and not _is_cached(a2)
     S.clear_caches(spark)
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def test_zip_guard_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """Under the guard an unchanged archive is not re-read by
+    importlib.invalidate_caches(); once it is rewritten with one more
+    module it is re-read, and the new module imports."""
+    archive = str(tmp_path / "guarded.zip")
+    _write_zip(archive, {"o2g_guard_a": "X = 1\n"})
+    reads = []
+    read = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        S._stat_guarded(zipimport.zipimporter.invalidate_caches),
+    )
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("o2g_guard_a").X == 1
+        importlib.invalidate_caches()  # the guard's first read of it
+        n = reads.count(archive)
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads.count(archive) == n
+
+        _write_zip(archive, {"o2g_guard_a": "X = 1\n", "o2g_guard_b": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(archive) == n + 1
+        assert importlib.import_module("o2g_guard_b").Y == 2
+    finally:
+        for name in ("o2g_guard_a", "o2g_guard_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_worker_import_guard_installed_in_workers_only(spark, zones_pdf):
+    """After an engine-UDF job every Python worker runs the guarded
+    invalidation, and a repeated invalidation re-reads no archive of the
+    worker's path (Spark's jar, pyspark.zip, the shipped package); the
+    driver keeps the stdlib method."""
+    pts = spark.createDataFrame([(1, 0.0, 0.0)], "pid long, lat double, lon double")
+    pip.pip_join(pts, synth.zone_rings(zones_pdf), res=8).count()
+
+    def probe(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        import importlib
+        import sys
+        import zipimport
+
+        import o2g_spark  # noqa: F401
+
+        guard = zipimport.zipimporter.invalidate_caches.__module__
+        n_zip = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        reads = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or read(p)
+        try:
+            importlib.invalidate_caches()
+            reads.clear()
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        for b in batches:
+            yield pa.array([f"{guard} {n_zip > 0} {len(reads)}"] * len(b))
+
+    got = {
+        r.m for r in spark.range(16).repartition(8)
+        .select(F.arrow_udf(probe, "string")("id").alias("m")).collect()
+    }
+    assert got == {"o2g_spark.session True 0"}
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
