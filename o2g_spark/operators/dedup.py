@@ -130,7 +130,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: "int | None | _UnsetType" = _USE_DEFAULT_CAP,
-    candidate_strategy: str = "auto",
     attach_sizes: str = "broadcast",
 ) -> DataFrame:
     """n-gram Jaccard near-dup pairs via shared-shingle buckets.
@@ -150,17 +149,6 @@ def jaccard_pairs(
     distribution but Σdf²-priced; pair it with
     :func:`jaccard_dropped_shingles` == 0 evidence or small corpora.
 
-    ``candidate_strategy``: "auto" (default) uses the inverted-index
-    self-join (measured faster than "bucket" at 5M pages on the r5
-    shape, 289 s vs 342 s, and still the default after the r6
-    count-based verification rewrite — see
-    :func:`_pair_intersections`). "bucket" expands pairs inside one
-    groupBy over the capped shingle buckets instead of self-joining
-    (requires ``max_df``; pair arrays bounded at C(max_df, 2)) and
-    stays available for executors where the join build/sort spills.
-    Candidate SETS are identical either way — only the physical plan
-    differs (pinned by test).
-
     ``attach_sizes``: "broadcast" (default — ids-only count
     aggregation + per-doc size table broadcast back, ~20% faster at
     bench scale) or "agg" (sizes ride the aggregation keys — the
@@ -173,23 +161,13 @@ def jaccard_pairs(
     if max_df is _USE_DEFAULT_CAP:
         _warn_default_cap()
         max_df = _DEFAULT_MAX_DF
-    if candidate_strategy not in ("auto", "join", "bucket"):
-        raise ValueError("candidate_strategy must be auto|join|bucket")
-    if candidate_strategy == "bucket" and max_df is None:
-        raise ValueError(
-            "candidate_strategy='bucket' needs max_df: the per-shingle "
-            "pair expansion is only plan/memory-safe when bucket size "
-            "is capped"
-        )
     # cache_latest: candidate generation + the hot-doc projection
     # re-scan this 2-3×; the columnar cache beats RDD-checkpoint blocks
     # 2-3× here, and the registry bounds CacheManager growth.
     sh_full = cache_latest(
         "dedup.jaccard.sh_full", _shingle_sets(df, id_col, text_col, n)
     )
-    pair_counts = _pair_intersections(
-        sh_full, max_df, candidate_strategy == "bucket", attach_sizes
-    )
+    pair_counts = _pair_intersections(sh_full, max_df, attach_sizes)
     inter = F.col("__inter")
     union = F.col("sz_a") + F.col("sz_b") - inter
     return (
@@ -203,7 +181,6 @@ def jaccard_pairs(
 def _pair_intersections(
     sh_full: DataFrame,
     max_df: "int | None",
-    use_bucket: bool,
     attach_sizes: str = "broadcast",
 ) -> DataFrame:
     """(id_a, id_b, sz_a, sz_b, __inter) for every pair sharing ≥ 1
@@ -263,70 +240,25 @@ def _pair_intersections(
         # whereas the rare list is nearly the whole vocabulary —
         # broadcasting it would OOM at exactly the corpus scale the cap
         # exists for (same shape as the near-dup hot-bucket cap).
-        # The anti-join also runs BEFORE the bucket strategy's
-        # collect_list below — a boilerplate shingle must never reach
-        # the agg buffer with millions of ids.
         dfreq = occ.groupBy("__sh").agg(F.count("*").alias("__df"))
         hot = dfreq.filter(F.col("__df") > max_df).select("__sh")
         occ = occ.join(F.broadcast(hot), "__sh", "left_anti")
     if not ride:
         occ = occ.select("__id", "__sh")
-    if use_bucket:
-        # CAPPED buckets: expand each shingle's ≤ max_df sorted ids
-        # into (i < j) pairs inside ONE groupBy — replaces the
-        # two-sided self-join with a single shuffle of the inverted
-        # index. Pair arrays are bounded at C(max_df, 2) entries per
-        # shingle row and materialized into a real column BEFORE
-        # explode (CLAUDE.md rule 1; __ids is an agg output, so the
-        # HOF lambdas reference a cheap column, not an inlined
-        # expensive expression — rule 8).
-        collected = (
-            F.struct("__id", "__sz") if ride else F.col("__id")
+    pair_rows = (
+        occ.alias("a")
+        .join(
+            occ.alias("b"),
+            (F.col("a.__sh") == F.col("b.__sh"))
+            & (F.col("a.__id") < F.col("b.__id")),
         )
-        grouped = (
-            occ.groupBy("__sh")
-            .agg(F.array_sort(F.collect_list(collected)).alias("__ids"))
-            .filter(F.size("__ids") >= 2)
+        .select(
+            F.col("a.__id").alias("id_a"),
+            *([F.col("a.__sz").alias("sz_a")] if ride else []),
+            F.col("b.__id").alias("id_b"),
+            *([F.col("b.__sz").alias("sz_b")] if ride else []),
         )
-        def _pair_struct(a, b):
-            if ride:
-                return F.struct(
-                    a["__id"].alias("id_a"), a["__sz"].alias("sz_a"),
-                    b["__id"].alias("id_b"), b["__sz"].alias("sz_b"),
-                )
-            return F.struct(a.alias("id_a"), b.alias("id_b"))
-        pair_arr = F.flatten(
-            F.transform(
-                "__ids",
-                lambda a, i: F.transform(
-                    F.slice(
-                        F.col("__ids"), i + F.lit(2),
-                        F.size("__ids") - i - F.lit(1),
-                    ),
-                    lambda b: _pair_struct(a, b),
-                ),
-            )
-        )
-        pair_rows = (
-            grouped.withColumn("__pairs", pair_arr)
-            .select(F.explode("__pairs").alias("__p"))
-            .select("__p.*")
-        )
-    else:
-        pair_rows = (
-            occ.alias("a")
-            .join(
-                occ.alias("b"),
-                (F.col("a.__sh") == F.col("b.__sh"))
-                & (F.col("a.__id") < F.col("b.__id")),
-            )
-            .select(
-                F.col("a.__id").alias("id_a"),
-                *([F.col("a.__sz").alias("sz_a")] if ride else []),
-                F.col("b.__id").alias("id_b"),
-                *([F.col("b.__sz").alias("sz_b")] if ride else []),
-            )
-        )
+    )
     # one row per shared capped shingle → count() = capped intersection
     if ride:
         counts = pair_rows.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(
@@ -459,7 +391,7 @@ def containment_pairs(
     # same count-based intersection machinery as jaccard_pairs (see
     # :func:`_pair_intersections`) — only the final ratio differs
     pair_counts = _pair_intersections(
-        sh_full, max_df, use_bucket=False, attach_sizes=attach_sizes
+        sh_full, max_df, attach_sizes=attach_sizes
     )
     inter = F.col("__inter")
     c_ab = F.round(inter / F.greatest(F.col("sz_a"), F.lit(1)), 6)

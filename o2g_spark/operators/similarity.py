@@ -119,6 +119,18 @@ def dot_sql(a_tbl: str, b_tbl: str) -> str:
     )
 
 
+def vector_dim(df: DataFrame, vec_col: str) -> int:
+    """Width of the first non-null vector in ``vec_col``, or 0 when the
+    column holds none (an empty frame: every caller then returns an
+    empty result, whatever width it bands or unrolls for)."""
+    first = (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("d"))
+        .first()
+    )
+    return 0 if first is None else int(first["d"])
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -141,8 +153,7 @@ def cosine_topk(
     fold the dominant cost of this operator.
     """
     if dim is None:
-        first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"]) if first and first["d"] is not None else None
+        dim = vector_dim(corpus, vec_col)
     # per-side norms BEFORE the fanout join: one HOF fold (or codegen
     # chain) per row instead of per (query × corpus) pair; bit-identical
     q = queries.select(
@@ -539,8 +550,7 @@ def embedding_near_dup_pairs(
     """
     n_planes = bands * bits_per_band
     if dim is None:
-        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"])
+        dim = vector_dim(df, vec_col)
     keys_udf = lsh_band_keys_udf(dim, bands, bits_per_band, seed)
     # cache_latest: the banded self-join scans this twice and the
     # vector fetch twice more; without caching the UDF matmul re-runs
@@ -617,8 +627,7 @@ def near_dup_hot_buckets(
     from :func:`embedding_near_dup_pairs` — the observable no-silent-cap
     companion (pipelines count/log these rows next to the dedup stats)."""
     if dim is None:
-        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"])
+        dim = vector_dim(df, vec_col)
     keys_udf = lsh_band_keys_udf(dim, bands, bits_per_band, seed)
     return (
         df.select(keys_udf(F.col(vec_col)).alias("__keys"))

@@ -1,7 +1,7 @@
 """Custom stateful streaming operators (driver brief:
 "applyInPandasWithState for custom stateful operators").
 
-Three canonical shapes for the crawl-stream case:
+Op families for the crawl-stream case:
 
 - :func:`dedup_stream` — keep the FIRST occurrence of each url within
   the watermark horizon (streaming analogue of dedup_exact; Spark's
@@ -10,31 +10,54 @@ Three canonical shapes for the crawl-stream case:
   timestamp via ``applyInPandasWithState``: arbitrary per-key state in
   an Arrow-batched Python function, with processing-time timeout so
   idle keys are evicted (bounded state at an unbounded stream).
-
-The stateful visit/near-dup operators default to EVENT-TIME idle
-timeouts (watermark-driven): replaying historical crawl data — the
-dominant real workload — must evict at the same data-time points every
-run; wall-clock (processing-time) timers remain available via
-``time_mode="processing"`` for live 24/7 ingest.
 - :func:`cell_visits_stateful` — geofence-dwell visits: a *visit* is a
   maximal run of consecutive events (by time) in the same cell. The
   run boundary is a VALUE change, not a time gap, so neither
   ``F.window`` nor ``F.session_window`` expresses it; state carries
-  each entity's open visit. :func:`cell_visits_batch` is the pure-
-  Catalyst backfill twin with a DuckDB oracle in the driver gate.
+  each entity's open visit (per user, or per shard with ``shards=``).
+  :func:`cell_visits_batch` is the pure-Catalyst backfill twin with a
+  DuckDB oracle among the gate queries.
+- near-dup candidate funnels, a stream op and a batch twin per
+  modality: text (:func:`near_dup_candidates_stream`, minhash bands),
+  embeddings (hyperplane sign bits), media (dHash / audio-fingerprint
+  chunk combinations) and video (frame dHashes). Each LSH bucket keeps
+  one canonical member; every later member pairs with it.
+- tumbling-window sketches: :func:`hll_window_stream` (distinct
+  counts) and :func:`quantile_window_stream`, one bounded sketch per
+  open (group, window), emitted once when the window closes and
+  bit-identical to the batch twins in operators.sketches.
+
+Every op after ``running_counts`` defaults to EVENT-TIME timeouts
+(watermark-driven): replaying historical crawl data — the dominant
+real workload — must evict at the same data-time points every run;
+wall-clock (processing-time) timers remain available via
+``time_mode="processing"`` for live 24/7 ingest.
+
+Those ops are thin callers of four shared pieces:
+:func:`_stream_prologue` (reject a batch frame, check ``time_mode``,
+set the watermark), :func:`_launch` (append-mode
+``applyInPandasWithState`` with the timeout in the configured time
+domain), the near-dup funnel (:func:`_bucket_candidates_batch` and
+:func:`_bucket_candidates_stream`, which take a modality's banding
+function) and the window fold (:func:`_window_fold_stream`, which
+takes a ``(fold, close)`` pair).
 
 Scale notes (100 TB/day stream): state is one tiny tuple per active
 key, hash-partitioned by the group key — the layout RocksDB state
-stores shard; timeouts bound state for keys that disappear.
+stores shard; timeouts bound state for keys that disappear. Group
+keys and state schemas live in checkpoints, so they must not change:
+tests/fixtures/stream_v1 resumes a checkpoint of every op.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+import time
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -159,37 +182,9 @@ def cell_visits_batch(
     )
 
 
-def cell_visits_batch_sql(
-    table: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    cell_col: str = "cell",
-    order_col: str = "event_id",
-) -> str:
-    """DuckDB twin of :func:`cell_visits_batch` (lag/cumsum, same order —
-    the cumsum MUST carry the order_col tie-break too, or duplicate
-    timestamps assign visit ids in arbitrary order and diverge from the
-    Spark side)."""
-    return f"""
-WITH marked AS (
-  SELECT {user_col} AS user_id, {ts_col} AS ts, {cell_col} AS cell,
-         {order_col} AS ord,
-         CASE WHEN lag({cell_col}) OVER w IS NULL
-                OR lag({cell_col}) OVER w <> {cell_col}
-              THEN 1 ELSE 0 END AS chg
-  FROM {table}
-  WINDOW w AS (PARTITION BY {user_col} ORDER BY {ts_col}, {order_col})
-),
-numbered AS (
-  SELECT user_id, ts, cell,
-         sum(chg) OVER (PARTITION BY user_id ORDER BY ts, ord
-                        ROWS UNBOUNDED PRECEDING) AS vid
-  FROM marked
-)
-SELECT user_id, cell, min(ts) AS enter_ts, max(ts) AS exit_ts,
-       count(*) AS n_events
-FROM numbered GROUP BY user_id, vid, cell
-"""
+# ----------------------------------------------- shared stateful pieces
+
+_SEP = "\x1f"
 
 
 def _epoch_ms(ts) -> int:
@@ -222,10 +217,50 @@ def _arm_timeout(
         state.setTimeoutDuration(timeout_ms)
 
 
-def _check_time_mode(time_mode: str) -> None:
+def _now_ms(state: GroupState, time_mode: str) -> int:
+    """"Now" in the configured time domain: the watermark in event
+    mode, the wall clock in processing mode."""
+    if time_mode == "event":
+        return state.getCurrentWatermarkMs()
+    return int(time.time() * 1000)
+
+
+def _stream_prologue(
+    stream: DataFrame, op: str, use: str, time_mode: str, ts_col: str,
+    watermark: str | None,
+) -> DataFrame:
+    """Entry checks of every event-time stateful op: reject a batch
+    frame (``use`` names the batch twin) and validate ``time_mode``,
+    then in event mode watermark ``ts_col`` unless the caller already
+    set one (``watermark=None``)."""
+    if not stream.isStreaming:
+        raise ValueError(f"{op} expects a streaming DataFrame; use {use}")
     if time_mode not in ("event", "processing"):
         raise ValueError(f"time_mode must be 'event' or 'processing', "
                          f"got {time_mode!r}")
+    if time_mode == "event" and watermark is not None:
+        stream = stream.withWatermark(ts_col, watermark)
+    return stream
+
+
+def _launch(
+    df: DataFrame, keys: list[str], fn: Callable[..., Iterator[pd.DataFrame]],
+    out_schema: T.StructType, state_schema: T.StructType, time_mode: str,
+) -> DataFrame:
+    """``applyInPandasWithState`` in append mode, grouped by ``keys``,
+    with its timeout in the configured time domain."""
+    timeout_conf = (
+        GroupStateTimeout.EventTimeTimeout
+        if time_mode == "event"
+        else GroupStateTimeout.ProcessingTimeTimeout
+    )
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout_conf,
+    )
 
 
 def cell_visits_stateful(
@@ -268,12 +303,10 @@ def cell_visits_stateful(
     Within a micro-batch rows are sorted by event time; cross-batch
     reordering is bounded by the watermark.
     """
-    if not stream.isStreaming:
-        raise ValueError("cell_visits_stateful expects a streaming DataFrame; "
-                         "use cell_visits_batch for batch backfill")
-    _check_time_mode(time_mode)
-    if time_mode == "event" and watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
+    stream = _stream_prologue(
+        stream, "cell_visits_stateful", "cell_visits_batch for batch backfill",
+        time_mode, ts_col, watermark,
+    )
     if shards is not None:
         return _cell_visits_sharded(
             stream, timeout_ms, user_col, ts_col, cell_col, order_col,
@@ -318,21 +351,8 @@ def cell_visits_stateful(
         _arm_timeout(state, time_mode, timeout_ms, _epoch_ms(cur[2]))
         yield pd.DataFrame(closed, columns=cols)
 
-    timeout_conf = (
-        GroupStateTimeout.EventTimeTimeout
-        if time_mode == "event"
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return (
-        stream.groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=VISIT_SCHEMA,
-            stateStructType=_VISIT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
-    )
+    return _launch(stream, [user_col], fn, VISIT_SCHEMA, _VISIT_STATE_SCHEMA,
+                   time_mode)
 
 
 _VISIT_SHARD_STATE_SCHEMA = T.StructType(
@@ -374,13 +394,6 @@ def _cell_visits_sharded(
             pd.Timestamp(int(last_us), unit="us"),
             int(n),
         )
-
-    def now_in_domain(state: GroupState) -> int:
-        if time_mode == "event":
-            return state.getCurrentWatermarkMs()
-        import time as _t
-
-        return int(_t.time() * 1000)
 
     def prune(visits: dict, now_ms: int,
               touched: set | None = None) -> list[tuple]:
@@ -424,7 +437,7 @@ def _cell_visits_sharded(
         if state.hasTimedOut:
             (visits,) = state.get
             visits = dict(visits)
-            closed = prune(visits, now_in_domain(state))
+            closed = prune(visits, _now_ms(state, time_mode))
             if visits:
                 state.update((visits,))
                 rearm(state, visits)
@@ -434,7 +447,7 @@ def _cell_visits_sharded(
             return
         (visits,) = state.get if state.exists else ({},)
         visits = dict(visits)
-        now_ms = now_in_domain(state)
+        now_ms = _now_ms(state, time_mode)
         rows = pd.concat(list(pdfs), ignore_index=True)
         # same (ts, order_col) total order as cell_visits_batch; run
         # logic is per-user, so globally ordered rows update each
@@ -479,21 +492,8 @@ def _cell_visits_sharded(
         rearm(state, visits)
         yield pd.DataFrame(closed, columns=cols)
 
-    timeout_conf = (
-        GroupStateTimeout.EventTimeTimeout
-        if time_mode == "event"
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return (
-        keyed.groupBy("__shard")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=VISIT_SCHEMA,
-            stateStructType=_VISIT_SHARD_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
-    )
+    return _launch(keyed, ["__shard"], fn, VISIT_SCHEMA,
+                   _VISIT_SHARD_STATE_SCHEMA, time_mode)
 
 
 # ------------------------------------- streaming near-dup candidates
@@ -525,7 +525,125 @@ _SHARD_STATE_SCHEMA = T.StructType(
         T.StructField("last_ms", T.LongType(), False),  # max over buckets
     ]
 )
-_SEP = "\x1f"
+
+
+def _key_cols(
+    id_col: str, ts_col: str | None
+) -> tuple[list[Column], list[str]]:
+    """The ``did[, ts]`` projection every banding keeps (the id as a
+    string, the event time when there is one) and its column names."""
+    keep = [F.col(id_col).cast("string").alias("did")]
+    if ts_col is None:
+        return keep, ["did"]
+    return [*keep, F.col(ts_col).alias("ts")], ["did", "ts"]
+
+
+def _bucket_candidates_batch(
+    df: DataFrame, band: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Batch side of the near-dup funnel: ``band`` turns ``df`` into
+    (did[, ts], band, key) rows; per (band, key) bucket the canonical
+    member is the first by (ts, id) and every other member pairs with
+    it. Output (id_a, id_b, band), id_a = canonical."""
+    banded = band(df)
+    order = ([F.col("ts").asc()] if "ts" in banded.columns else []) + [
+        F.col("did").asc()
+    ]
+    w = Window.partitionBy("band", "key").orderBy(*order)
+    return (
+        banded.withColumn("__canon", F.first("did").over(w))
+        .filter(F.col("did") != F.col("__canon"))
+        .select(
+            F.col("__canon").alias("id_a"),
+            F.col("did").alias("id_b"),
+            F.col("band").cast(T.IntegerType()).alias("band"),
+        )
+    )
+
+
+def _bucket_candidates_stream(
+    op: str, stream: DataFrame, ts_col: str, timeout_ms: int, time_mode: str,
+    watermark: str | None, shards: int, band: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Stream side of the near-dup funnel, the sharded candidate
+    machinery of all four modality streams: after the prologue,
+    ``band`` turns the stream into (did string, ts timestamp, band int,
+    key) rows; each (band, key) bucket's state is one encoded
+    (canonical, n_seen, last_ms) tuple inside its shard's map."""
+    stream = _stream_prologue(
+        stream, op, f"{op.replace('_stream', '_batch')} for batch backfill",
+        time_mode, ts_col, watermark,
+    )
+    banded = band(stream).withColumn(
+        "shard", F.pmod(F.xxhash64("band", "key"), F.lit(shards))
+    )
+
+    def fn(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        buckets, shard_last = state.get if state.exists else ({}, 0)
+        buckets = dict(buckets)
+        # per-bucket eviction, in the configured time domain, BEFORE
+        # applying this batch's rows: a bucket whose idle gap already
+        # exceeded the timeout must not pair with the new arrival.
+        # CLOCK CONSISTENCY: the stored per-bucket timestamp and the
+        # "now" it is pruned against must live in the SAME domain —
+        # event mode stores event time and prunes at the watermark;
+        # processing mode stores the WALL time of the last batch that
+        # touched the bucket and prunes at the wall clock (storing
+        # event time there would evict every bucket of a replayed
+        # historical stream on its second batch).
+        now_ms = _now_ms(state, time_mode)
+        if now_ms > 0 and buckets:
+            # keep while last+timeout >= now — the same strict-after
+            # deadline as _cell_visits_sharded's prune() and Spark's
+            # own event-time timers (which fire only once the
+            # watermark advances BEYOND the set timestamp)
+            buckets = {
+                bk: v
+                for bk, v in buckets.items()
+                if int(v.rsplit(_SEP, 1)[1]) + timeout_ms >= now_ms
+            }
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        # same (ts, id) total order as the batch twin — deterministic
+        # canonical selection within a micro-batch
+        rows = rows.sort_values(["ts", "did"]).reset_index(drop=True)
+        out: list[tuple] = []
+        for r in rows.itertuples():
+            did = r.did
+            bk = f"{int(r.band)}{_SEP}{r.key}"
+            ms = _epoch_ms(r.ts) if time_mode == "event" else now_ms
+            shard_last = max(shard_last, ms)
+            cur = buckets.get(bk)
+            if cur is None:
+                buckets[bk] = f"{did}{_SEP}1{_SEP}{ms}"
+                continue
+            # rsplit from the RIGHT: n/ms are always the two numeric
+            # tail fields, so a doc id containing the separator byte
+            # can never shift the parse (split() would crash on it)
+            canon, n, last = cur.rsplit(_SEP, 2)
+            if did != canon:
+                out.append((canon, did, int(r.band)))
+            # never move the bucket's last-arrival BACKWARD: a
+            # late-but-above-watermark row in a later micro-batch
+            # carries an older event ts than the stored last_ms, and
+            # re-encoding with it would make the eviction point depend
+            # on micro-batch boundaries (replays that batch differently
+            # would evict differently)
+            buckets[bk] = f"{canon}{_SEP}{int(n) + 1}{_SEP}{max(ms, int(last))}"
+        state.update((buckets, shard_last))
+        # shard-level timer: fires only once EVERY bucket has been idle
+        # past the timeout (per-bucket pruning above handles the rest)
+        _arm_timeout(state, time_mode, timeout_ms, shard_last)
+        yield pd.DataFrame(out, columns=["id_a", "id_b", "band"])
+
+    return _launch(banded, ["shard"], fn, CANDIDATE_SCHEMA,
+                   _SHARD_STATE_SCHEMA, time_mode)
 
 
 def _banded_docs(
@@ -553,11 +671,7 @@ def _banded_docs(
             ).alias("key"),
         ),
     )
-    keep = [F.col(id_col).cast("string").alias("did")]
-    out_cols = ["did"]
-    if ts_col is not None:
-        keep.append(F.col(ts_col).alias("ts"))
-        out_cols.append("ts")
+    keep, out_cols = _key_cols(id_col, ts_col)
     # Materialize the signature at a SHUFFLE boundary before banding.
     # Without it CollapseProject merges the two projections: __sig is
     # textually referenced once (inside the per-band slice lambda), so
@@ -591,20 +705,8 @@ def near_dup_candidates_batch(
     """Batch twin of :func:`near_dup_candidates_stream`: per LSH bucket
     the canonical doc is the first by (ts, id) — every other member
     pairs with it. Output (id_a, id_b, band), id_a = canonical."""
-    banded = _banded_docs(docs, id_col, text_col, ts_col, num_hashes, bands)
-    order = ([F.col("ts").asc()] if ts_col is not None else []) + [
-        F.col("did").asc()
-    ]
-    w = Window.partitionBy("band", "key").orderBy(*order)
-    return (
-        banded.withColumn("__canon", F.first("did").over(w))
-        .filter(F.col("did") != F.col("__canon"))
-        .select(
-            F.col("__canon").alias("id_a"),
-            F.col("did").alias("id_b"),
-            F.col("band").cast(T.IntegerType()).alias("band"),
-        )
-    )
+    return _bucket_candidates_batch(docs, lambda df: _banded_docs(
+        df, id_col, text_col, ts_col, num_hashes, bands))
 
 
 def near_dup_candidates_stream(
@@ -655,116 +757,11 @@ def near_dup_candidates_stream(
     start). Drain or finish old queries on the old code; start new
     checkpoints here.
     """
-    if not stream.isStreaming:
-        raise ValueError(
-            "near_dup_candidates_stream expects a streaming DataFrame; "
-            "use near_dup_candidates_batch for batch backfill"
-        )
-    _check_time_mode(time_mode)
-    if time_mode == "event" and watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-    banded = _banded_docs(stream, id_col, text_col, ts_col, num_hashes, bands)
-    return _bucket_candidates_stream(banded, timeout_ms, time_mode, shards)
-
-
-def _bucket_candidates_stream(
-    banded: DataFrame,
-    timeout_ms: int,
-    time_mode: str,
-    shards: int,
-) -> DataFrame:
-    """Banding-agnostic sharded candidate machinery (shared by the
-    minhash/text and hyperplane/embedding streams): ``banded`` must
-    carry (did string, ts timestamp, band int, key) rows; each
-    (band, key) bucket's state is one encoded (canonical, n_seen,
-    last_ms) tuple inside its shard's map."""
-    banded = banded.withColumn(
-        "shard", F.pmod(F.xxhash64("band", "key"), F.lit(shards))
-    )
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        buckets, shard_last = state.get if state.exists else ({}, 0)
-        buckets = dict(buckets)
-        # per-bucket eviction, in the configured time domain, BEFORE
-        # applying this batch's rows: a bucket whose idle gap already
-        # exceeded the timeout must not pair with the new arrival.
-        # CLOCK CONSISTENCY: the stored per-bucket timestamp and the
-        # "now" it is pruned against must live in the SAME domain —
-        # event mode stores event time and prunes at the watermark;
-        # processing mode stores the WALL time of the last batch that
-        # touched the bucket and prunes at the wall clock (storing
-        # event time there would evict every bucket of a replayed
-        # historical stream on its second batch).
-        if time_mode == "event":
-            now_ms = state.getCurrentWatermarkMs()
-        else:
-            import time as _t
-
-            now_ms = int(_t.time() * 1000)
-        if now_ms > 0 and buckets:
-            # keep while last+timeout >= now — the same strict-after
-            # deadline as _cell_visits_sharded's prune() and Spark's
-            # own event-time timers (which fire only once the
-            # watermark advances BEYOND the set timestamp)
-            buckets = {
-                bk: v
-                for bk, v in buckets.items()
-                if int(v.rsplit(_SEP, 1)[1]) + timeout_ms >= now_ms
-            }
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        # same (ts, id) total order as the batch twin — deterministic
-        # canonical selection within a micro-batch
-        rows = rows.sort_values(["ts", "did"]).reset_index(drop=True)
-        out: list[tuple] = []
-        for r in rows.itertuples():
-            did = r.did
-            bk = f"{int(r.band)}{_SEP}{r.key}"
-            ms = _epoch_ms(r.ts) if time_mode == "event" else now_ms
-            shard_last = max(shard_last, ms)
-            cur = buckets.get(bk)
-            if cur is None:
-                buckets[bk] = f"{did}{_SEP}1{_SEP}{ms}"
-                continue
-            # rsplit from the RIGHT: n/ms are always the two numeric
-            # tail fields, so a doc id containing the separator byte
-            # can never shift the parse (split() would crash on it)
-            canon, n, last = cur.rsplit(_SEP, 2)
-            if did != canon:
-                out.append((canon, did, int(r.band)))
-            # never move the bucket's last-arrival BACKWARD: a
-            # late-but-above-watermark row in a later micro-batch
-            # carries an older event ts than the stored last_ms, and
-            # re-encoding with it would make the eviction point depend
-            # on micro-batch boundaries (replays that batch differently
-            # would evict differently)
-            buckets[bk] = f"{canon}{_SEP}{int(n) + 1}{_SEP}{max(ms, int(last))}"
-        state.update((buckets, shard_last))
-        # shard-level timer: fires only once EVERY bucket has been idle
-        # past the timeout (per-bucket pruning above handles the rest)
-        _arm_timeout(state, time_mode, timeout_ms, shard_last)
-        yield pd.DataFrame(out, columns=["id_a", "id_b", "band"])
-
-    timeout_conf = (
-        GroupStateTimeout.EventTimeTimeout
-        if time_mode == "event"
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return (
-        banded.groupBy("shard")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=CANDIDATE_SCHEMA,
-            stateStructType=_SHARD_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
+    return _bucket_candidates_stream(
+        "near_dup_candidates_stream", stream, ts_col, timeout_ms, time_mode,
+        watermark, shards,
+        lambda df: _banded_docs(
+            df, id_col, text_col, ts_col, num_hashes, bands),
     )
 
 
@@ -784,11 +781,7 @@ def _banded_vecs(
     from ..operators.similarity import lsh_band_keys_udf
 
     keys_udf = lsh_band_keys_udf(dim, bands, bits_per_band, seed)
-    keep = [F.col(id_col).cast("string").alias("did")]
-    out_cols = ["did"]
-    if ts_col is not None:
-        keep.append(F.col(ts_col).alias("ts"))
-        out_cols.append("ts")
+    keep, out_cols = _key_cols(id_col, ts_col)
     sig = df.select(*keep, keys_udf(F.col(vec_col)).alias("__keys"))
     return sig.select(
         *out_cols, F.posexplode("__keys").alias("band", "key")
@@ -811,24 +804,12 @@ def near_dup_embedding_batch(
     canonical. Cosine verification of the candidates happens
     downstream (operators.similarity), exactly like the text family.
     """
+    from ..operators.similarity import vector_dim
+
     if dim is None:
-        dim = int(vecs.select(F.size(F.col(vec_col)).alias("d")).first()["d"])
-    banded = _banded_vecs(
-        vecs, id_col, vec_col, ts_col, bands, bits_per_band, dim, seed
-    )
-    order = ([F.col("ts").asc()] if ts_col is not None else []) + [
-        F.col("did").asc()
-    ]
-    w = Window.partitionBy("band", "key").orderBy(*order)
-    return (
-        banded.withColumn("__canon", F.first("did").over(w))
-        .filter(F.col("did") != F.col("__canon"))
-        .select(
-            F.col("__canon").alias("id_a"),
-            F.col("did").alias("id_b"),
-            F.col("band").cast(T.IntegerType()).alias("band"),
-        )
-    )
+        dim = vector_dim(vecs, vec_col)
+    return _bucket_candidates_batch(vecs, lambda df: _banded_vecs(
+        df, id_col, vec_col, ts_col, bands, bits_per_band, dim, seed))
 
 
 def near_dup_embedding_stream(
@@ -870,18 +851,12 @@ def near_dup_embedding_stream(
     bytes; the 12-bit default matches the BATCH twin's gate fixture,
     not a production corpus.
     """
-    if not stream.isStreaming:
-        raise ValueError(
-            "near_dup_embedding_stream expects a streaming DataFrame; "
-            "use near_dup_embedding_batch for batch backfill"
-        )
-    _check_time_mode(time_mode)
-    if time_mode == "event" and watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-    banded = _banded_vecs(
-        stream, id_col, vec_col, ts_col, bands, bits_per_band, dim, seed
+    return _bucket_candidates_stream(
+        "near_dup_embedding_stream", stream, ts_col, timeout_ms, time_mode,
+        watermark, shards,
+        lambda df: _banded_vecs(
+            df, id_col, vec_col, ts_col, bands, bits_per_band, dim, seed),
     )
-    return _bucket_candidates_stream(banded, timeout_ms, time_mode, shards)
 
 
 # --------------------------------- streaming MEDIA near-dup
@@ -902,11 +877,7 @@ def _banded_media(
 
     sig_udf = media_signature_udf(kind, frame_samples)
     src = df.filter(F.col("kind") == kind) if "kind" in df.columns else df
-    keep = [F.col(id_col).cast("string").alias("did")]
-    out_cols = ["did"]
-    if ts_col is not None:
-        keep.append(F.col(ts_col).alias("ts"))
-        out_cols.append("ts")
+    keep, out_cols = _key_cols(id_col, ts_col)
     sig = src.select(*keep, sig_udf(F.col(payload_col)).alias("__sig")).filter(
         F.col("__sig").isNotNull()
     )
@@ -931,23 +902,9 @@ def near_dup_media_batch(
     combination band bucket the canonical media row is the first by
     (ts, id) — every other member pairs with it. Output (id_a, id_b,
     band), id_a = canonical."""
-    banded = _banded_media(
-        media, kind, id_col, payload_col, ts_col, chunks, band_chunks,
-        frame_samples,
-    )
-    order = ([F.col("ts").asc()] if ts_col is not None else []) + [
-        F.col("did").asc()
-    ]
-    w = Window.partitionBy("band", "key").orderBy(*order)
-    return (
-        banded.withColumn("__canon", F.first("did").over(w))
-        .filter(F.col("did") != F.col("__canon"))
-        .select(
-            F.col("__canon").alias("id_a"),
-            F.col("did").alias("id_b"),
-            F.col("band").cast(T.IntegerType()).alias("band"),
-        )
-    )
+    return _bucket_candidates_batch(media, lambda df: _banded_media(
+        df, kind, id_col, payload_col, ts_col, chunks, band_chunks,
+        frame_samples))
 
 
 def near_dup_media_stream(
@@ -989,19 +946,13 @@ def near_dup_media_stream(
     corpus-sized-bucket rule). The (8, 2) default's 16-bit keys cover
     horizons to ~1M media rows; use (4, 2) (32-bit keys, verify at
     Hamming ≤ 2) beyond."""
-    if not stream.isStreaming:
-        raise ValueError(
-            "near_dup_media_stream expects a streaming DataFrame; "
-            "use near_dup_media_batch for batch backfill"
-        )
-    _check_time_mode(time_mode)
-    if time_mode == "event" and watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-    banded = _banded_media(
-        stream, kind, id_col, payload_col, ts_col, chunks, band_chunks,
-        frame_samples,
+    return _bucket_candidates_stream(
+        "near_dup_media_stream", stream, ts_col, timeout_ms, time_mode,
+        watermark, shards,
+        lambda df: _banded_media(
+            df, kind, id_col, payload_col, ts_col, chunks, band_chunks,
+            frame_samples),
     )
-    return _bucket_candidates_stream(banded, timeout_ms, time_mode, shards)
 
 
 # --------------------------------- streaming VIDEO near-dup
@@ -1021,11 +972,7 @@ def _banded_video(
 
     sig_udf = video_frame_dhash_udf(every_k)
     src = df.filter(F.col("kind") == "video") if "kind" in df.columns else df
-    keep = [F.col(id_col).cast("string").alias("did")]
-    out_cols = ["did"]
-    if ts_col is not None:
-        keep.append(F.col(ts_col).alias("ts"))
-        out_cols.append("ts")
+    keep, out_cols = _key_cols(id_col, ts_col)
     sig = src.select(*keep, sig_udf(F.col(payload_col)).alias("__fh")).filter(
         F.col("__fh").isNotNull()
     )
@@ -1047,20 +994,8 @@ def near_dup_video_batch(
     id_a = canonical, band ≡ 0 — one row per shared bucket, like the
     stream (a pair sharing k frames appears k times; downstream
     verify dedups, so neither side pays a distinct exchange here)."""
-    banded = _banded_video(media, id_col, payload_col, ts_col, every_k)
-    order = ([F.col("ts").asc()] if ts_col is not None else []) + [
-        F.col("did").asc()
-    ]
-    w = Window.partitionBy("band", "key").orderBy(*order)
-    return (
-        banded.withColumn("__canon", F.first("did").over(w))
-        .filter(F.col("did") != F.col("__canon"))
-        .select(
-            F.col("__canon").alias("id_a"),
-            F.col("did").alias("id_b"),
-            F.col("band").cast(T.IntegerType()).alias("band"),
-        )
-    )
+    return _bucket_candidates_batch(media, lambda df: _banded_video(
+        df, id_col, payload_col, ts_col, every_k))
 
 
 def near_dup_video_stream(
@@ -1093,16 +1028,97 @@ def near_dup_video_stream(
     timeout matched to the active horizon. State is O(active frame
     hashes), sharded; eviction semantics identical to
     :func:`near_dup_candidates_stream`."""
-    if not stream.isStreaming:
-        raise ValueError(
-            "near_dup_video_stream expects a streaming DataFrame; "
-            "use near_dup_video_batch for batch backfill"
+    return _bucket_candidates_stream(
+        "near_dup_video_stream", stream, ts_col, timeout_ms, time_mode,
+        watermark, shards,
+        lambda df: _banded_video(
+            df, id_col, payload_col, ts_col, every_k),
+    )
+
+
+# ------------------------------------------------ tumbling-window fold
+
+
+def _window_rows(
+    stream: DataFrame, group_col: str, value_col: str, ts_col: str,
+    window_seconds: int, *cols: Column,
+) -> DataFrame:
+    """(grp, ws_s, *cols, __ts) rows for the non-null values: the group
+    as a string, the tumbling window's start in epoch seconds, and the
+    watermarked column, which the state op must keep carrying."""
+    from ..operators import sketches
+
+    if window_seconds <= 0:
+        raise ValueError("window_seconds must be positive")
+    ws = (
+        F.floor(
+            sketches._epoch_seconds(stream, ts_col) / F.lit(window_seconds)
         )
-    _check_time_mode(time_mode)
-    if time_mode == "event" and watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-    banded = _banded_video(stream, id_col, payload_col, ts_col, every_k)
-    return _bucket_candidates_stream(banded, timeout_ms, time_mode, shards)
+        * F.lit(window_seconds)
+    ).cast(T.LongType())
+    return stream.where(F.col(value_col).isNotNull()).select(
+        F.col(group_col).cast(T.StringType()).alias("grp"),
+        ws.alias("ws_s"),
+        *cols,
+        F.col(ts_col).alias("__ts"),
+    )
+
+
+def _window_fold_stream(
+    pre: DataFrame, window_seconds: int, grace_ms: int, time_mode: str,
+    out_schema: T.StructType, state_schema: T.StructType,
+    fold: Callable[[bytes | None, Iterator[pd.DataFrame]], bytes],
+    close: Callable[[str, int, bytes], tuple],
+) -> DataFrame:
+    """The window sketches' state op over :func:`_window_rows` output:
+    per (grp, ws_s) the state is one binary sketch. ``fold(buf, pdfs)``
+    merges a micro-batch into it (``buf`` is None for a new window);
+    ``close(grp, ws_s, buf)`` turns it into the window's one output row
+    once the time domain passes the window end (+ ``grace_ms``)."""
+    out_cols = out_schema.fieldNames()
+
+    def fn(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        grp, ws_s = key
+        ws_s = int(ws_s)  # numpy int64 breaks GroupState's JSON layer
+        # LATE-ROW GUARD: applyInPandasWithState does NOT drop
+        # below-watermark rows itself — without this, a row arriving
+        # after its window was closed re-creates the key with fresh
+        # state and emits a DUPLICATE partial sketch (observed: 867
+        # emissions for 477 windows on an out-of-order replay).
+        # Matching Spark's own windowed-agg semantics: once the
+        # watermark passes the window end (+ grace), its rows drop.
+        if (
+            time_mode == "event"
+            and not state.exists
+            and not state.hasTimedOut
+            and state.getCurrentWatermarkMs()
+            >= (ws_s + window_seconds) * 1000 + grace_ms
+        ):
+            for _ in pdfs:
+                pass  # drain the iterator; rows are late, window closed
+            yield pd.DataFrame([], columns=out_cols)
+            return
+        if state.hasTimedOut:
+            row = close(grp, ws_s, state.get[0])
+            state.remove()
+            yield pd.DataFrame([row], columns=out_cols)
+            return
+        state.update((fold(state.get[0] if state.exists else None, pdfs),))
+        # close when the time domain passes the window END (+ grace):
+        # window membership is fixed by ws_s, so unlike the idle-
+        # eviction ops the deadline never moves with new rows
+        _arm_timeout(
+            state, time_mode,
+            window_seconds * 1000 + grace_ms, ws_s * 1000,
+        )
+        yield pd.DataFrame([], columns=out_cols)
+
+    return _launch(pre, ["grp", "ws_s"], fn, out_schema, state_schema,
+                   time_mode)
 
 
 # --------------------------------------------------------- windowed HLL
@@ -1155,79 +1171,22 @@ def hll_window_stream(
     """
     from ..operators import sketches
 
-    if not stream.isStreaming:
-        raise ValueError("hll_window_stream expects a streaming DataFrame; "
-                         "use sketches.hll_window_batch for backfill")
-    if window_seconds <= 0:
-        raise ValueError("window_seconds must be positive")
-    _check_time_mode(time_mode)
-    if time_mode == "event" and watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-
+    stream = _stream_prologue(
+        stream, "hll_window_stream", "sketches.hll_window_batch for backfill",
+        time_mode, ts_col, watermark,
+    )
     m = 1 << p
     k = 60 - p + 1
     reg, rho = sketches.hll_register(value_col, p)
-    ws = (
-        F.floor(
-            sketches._epoch_seconds(stream, ts_col) / F.lit(window_seconds)
-        )
-        * F.lit(window_seconds)
-    ).cast(T.LongType())
-    pre = stream.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).cast(T.StringType()).alias("grp"),
-        ws.alias("ws_s"),
-        reg.alias("__reg"),
-        rho.alias("__rho"),
-        F.col(ts_col).alias("__ts"),
+    pre = _window_rows(
+        stream, group_col, value_col, ts_col, window_seconds,
+        reg.alias("__reg"), rho.alias("__rho"),
     )
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        grp, ws_s = key
-        ws_s = int(ws_s)  # numpy int64 breaks GroupState's JSON layer
-        # LATE-ROW GUARD: applyInPandasWithState does NOT drop
-        # below-watermark rows itself — without this, a row arriving
-        # after its window was closed re-creates the key with fresh
-        # state and emits a DUPLICATE partial sketch (observed: 867
-        # emissions for 477 windows on an out-of-order replay).
-        # Matching Spark's own windowed-agg semantics: once the
-        # watermark passes the window end (+ grace), its rows drop.
-        if (
-            time_mode == "event"
-            and not state.exists
-            and not state.hasTimedOut
-            and state.getCurrentWatermarkMs()
-            >= (ws_s + window_seconds) * 1000 + grace_ms
-        ):
-            for _ in pdfs:
-                pass  # drain the iterator; rows are late, window closed
-            yield pd.DataFrame(
-                [], columns=["grp", "ws_s", "n_regs", "__present"]
-            )
-            return
-        if state.hasTimedOut:
-            (buf,) = state.get
-            arr = np.frombuffer(buf, dtype=np.uint8)
-            present_mask = arr > 0
-            n_regs = int(present_mask.sum())
-            # exact python ints — no float touches the harmonic
-            present = sum(
-                1 << (k - int(r)) for r in arr[present_mask]
-            )
-            state.remove()
-            yield pd.DataFrame(
-                [(grp, ws_s, n_regs, present)],
-                columns=["grp", "ws_s", "n_regs", "__present"],
-            )
-            return
+    def fold(buf: bytes | None, pdfs: Iterator[pd.DataFrame]) -> bytes:
         arr = (
-            np.frombuffer(state.get[0], dtype=np.uint8).copy()
-            if state.exists
+            np.frombuffer(buf, dtype=np.uint8).copy()
+            if buf is not None
             else np.zeros(m, dtype=np.uint8)
         )
         for pdf in pdfs:
@@ -1236,32 +1195,18 @@ def hll_window_stream(
                 pdf["__reg"].to_numpy(dtype=np.int64),
                 pdf["__rho"].to_numpy(dtype=np.uint8),
             )
-        state.update((arr.tobytes(),))
-        # close when the time domain passes the window END (+ grace):
-        # window membership is fixed by ws_s, so unlike the idle-
-        # eviction ops the deadline never moves with new rows
-        _arm_timeout(
-            state, time_mode,
-            window_seconds * 1000 + grace_ms, ws_s * 1000,
-        )
-        yield pd.DataFrame(
-            [], columns=["grp", "ws_s", "n_regs", "__present"]
-        )
+        return arr.tobytes()
 
-    timeout_conf = (
-        GroupStateTimeout.EventTimeTimeout
-        if time_mode == "event"
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    folded = (
-        pre.groupBy("grp", "ws_s")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_HLL_OUT_SCHEMA,
-            stateStructType=_HLL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
+    def close(grp: str, ws_s: int, buf: bytes) -> tuple:
+        arr = np.frombuffer(buf, dtype=np.uint8)
+        present_mask = arr > 0
+        # exact python ints — no float touches the harmonic
+        present = sum(1 << (k - int(r)) for r in arr[present_mask])
+        return (grp, ws_s, int(present_mask.sum()), present)
+
+    folded = _window_fold_stream(
+        pre, window_seconds, grace_ms, time_mode,
+        _HLL_OUT_SCHEMA, _HLL_STATE_SCHEMA, fold, close,
     )
     est = sketches.hll_est_expr(F.col("n_regs"), F.col("__present"), p)
     return folded.select("grp", "ws_s", "n_regs", est.alias("hll_est"))
@@ -1306,31 +1251,18 @@ def quantile_window_stream(
     """
     from ..operators import sketches
 
-    if not stream.isStreaming:
-        raise ValueError(
-            "quantile_window_stream expects a streaming DataFrame; "
-            "use sketches.qsketch_window_batch for backfill"
-        )
-    if window_seconds <= 0:
-        raise ValueError("window_seconds must be positive")
-    _check_time_mode(time_mode)
+    stream = _stream_prologue(
+        stream, "quantile_window_stream",
+        "sketches.qsketch_window_batch for backfill",
+        time_mode, ts_col, watermark,
+    )
     labels = sketches._q_ppm(quantiles or {"p50": 0.5})
     sketches._check_qsketch(sub_bits)
     sketches._q_require_integral(stream, value_col)
-    if time_mode == "event" and watermark is not None:
-        stream = stream.withWatermark(ts_col, watermark)
 
-    ws = (
-        F.floor(
-            sketches._epoch_seconds(stream, ts_col) / F.lit(window_seconds)
-        )
-        * F.lit(window_seconds)
-    ).cast(T.LongType())
-    pre = stream.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).cast(T.StringType()).alias("grp"),
-        ws.alias("ws_s"),
+    pre = _window_rows(
+        stream, group_col, value_col, ts_col, window_seconds,
         F.col(value_col).cast(T.LongType()).alias("__v"),
-        F.col(ts_col).alias("__ts"),
     )
     for name, col in sketches._q_bucket_cols(F.col("__v"), sub_bits):
         pre = pre.withColumn(name, col)
@@ -1339,7 +1271,6 @@ def quantile_window_stream(
     # labels sorted by ppm so the close path's single cumsum walk is
     # valid (ranks non-decreasing in q)
     labels.sort(key=lambda lp: lp[1])
-    out_cols = ["grp", "ws_s", "n", *[lbl for lbl, _ in labels]]
     out_schema = T.StructType(
         [
             T.StructField("grp", T.StringType()),
@@ -1352,72 +1283,34 @@ def quantile_window_stream(
         [T.StructField("pairs", T.BinaryType(), False)]
     )
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        grp, ws_s = key
-        ws_s = int(ws_s)  # numpy int64 breaks GroupState's JSON layer
-        # LATE-ROW GUARD (see hll_window_stream): rows arriving after
-        # their window closed must not re-create the key
-        if (
-            time_mode == "event"
-            and not state.exists
-            and not state.hasTimedOut
-            and state.getCurrentWatermarkMs()
-            >= (ws_s + window_seconds) * 1000 + grace_ms
-        ):
-            for _ in pdfs:
-                pass
-            yield pd.DataFrame([], columns=out_cols)
-            return
-        if state.hasTimedOut:
-            pairs = np.frombuffer(state.get[0], dtype=np.int64).reshape(-1, 2)
-            n = int(pairs[:, 1].sum())
-            row = [grp, ws_s, n]
-            idx = 0
-            # pairs are kept sorted by bucket id; one walk serves all
-            # labels because ranks are non-decreasing in q
-            cums = pairs[:, 1].cumsum()
-            for lbl, ppm in labels:
-                r = sketches.q_rank(n, ppm)
-                while idx < len(cums) and int(cums[idx]) < r:
-                    idx += 1
-                row.append(sketches.qb_value(int(pairs[idx, 0]), sub_bits))
-            state.remove()
-            yield pd.DataFrame([tuple(row)], columns=out_cols)
-            return
+    def fold(buf: bytes | None, pdfs: Iterator[pd.DataFrame]) -> bytes:
         counts: dict[int, int] = {}
-        if state.exists:
-            prev = np.frombuffer(state.get[0], dtype=np.int64).reshape(-1, 2)
+        if buf is not None:
+            prev = np.frombuffer(buf, dtype=np.int64).reshape(-1, 2)
             counts = {int(b): int(c) for b, c in prev}
         for pdf in pdfs:
             vc = pdf["__qb"].value_counts()
             for b, c in vc.items():
                 b = int(b)
                 counts[b] = counts.get(b, 0) + int(c)
-        pairs = np.array(
-            sorted(counts.items()), dtype=np.int64
-        )
-        state.update((pairs.tobytes(),))
-        _arm_timeout(
-            state, time_mode,
-            window_seconds * 1000 + grace_ms, ws_s * 1000,
-        )
-        yield pd.DataFrame([], columns=out_cols)
+        return np.array(sorted(counts.items()), dtype=np.int64).tobytes()
 
-    timeout_conf = (
-        GroupStateTimeout.EventTimeTimeout
-        if time_mode == "event"
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return pre.groupBy("grp", "ws_s").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout_conf,
+    def close(grp: str, ws_s: int, buf: bytes) -> tuple:
+        pairs = np.frombuffer(buf, dtype=np.int64).reshape(-1, 2)
+        n = int(pairs[:, 1].sum())
+        row = [grp, ws_s, n]
+        idx = 0
+        # pairs are kept sorted by bucket id; one walk serves all
+        # labels because ranks are non-decreasing in q
+        cums = pairs[:, 1].cumsum()
+        for lbl, ppm in labels:
+            r = sketches.q_rank(n, ppm)
+            while idx < len(cums) and int(cums[idx]) < r:
+                idx += 1
+            row.append(sketches.qb_value(int(pairs[idx, 0]), sub_bits))
+        return tuple(row)
+
+    return _window_fold_stream(
+        pre, window_seconds, grace_ms, time_mode,
+        out_schema, state_schema, fold, close,
     )

@@ -248,29 +248,11 @@ def test_jaccard_default_cap_warns_once(corpus):
         assert not any("default df cap" in str(x.message) for x in w)
 
 
-def test_jaccard_candidate_strategies_equal(corpus):
-    """The bucket expansion (one groupBy) and the inverted-index
-    self-join must produce identical pairs — only the physical plan
-    differs (r4)."""
-    kw = dict(n=3, threshold=0.4, max_df=5)
-    a = sorted(map(tuple, dedup.jaccard_pairs(
-        corpus, "doc_id", "text", candidate_strategy="bucket", **kw
-    ).collect()))
-    b = sorted(map(tuple, dedup.jaccard_pairs(
-        corpus, "doc_id", "text", candidate_strategy="join", **kw
-    ).collect()))
-    assert a == b and len(a) > 0
-    with pytest.raises(ValueError, match="bucket"):
-        dedup.jaccard_pairs(corpus, "doc_id", "text", n=3, max_df=None,
-                            candidate_strategy="bucket")
-
-
 def test_jaccard_attach_sizes_strategies_equal(corpus):
     """r6: the default ids-only aggregation + broadcast size join-back
-    must equal the ride-the-agg-keys escape exactly, for both candidate
-    strategies and for the exact (max_df=None) path."""
-    for kw in (dict(max_df=5), dict(max_df=5, candidate_strategy="bucket"),
-               dict(max_df=None)):
+    must equal the ride-the-agg-keys escape exactly, for the capped and
+    the exact (max_df=None) path."""
+    for kw in (dict(max_df=5), dict(max_df=None)):
         a = sorted(map(tuple, dedup.jaccard_pairs(
             corpus, "doc_id", "text", n=3, threshold=0.4,
             attach_sizes="broadcast", **kw).collect()))

@@ -157,6 +157,27 @@ def test_embedding_near_dup_hot_bucket_cap(spark):
     assert len(hot) > 0 and all(r["size"] >= 30 for r in hot)
 
 
+def test_dimension_probe_on_empty_frame(spark):
+    """An empty frame gives an empty result with the documented
+    columns at every site that probes the vector width."""
+    from o2g_spark.streaming import stateful
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    got = {
+        "pairs": sim.embedding_near_dup_pairs(empty),
+        "hot": sim.near_dup_hot_buckets(empty, max_bucket=1),
+        "batch": stateful.near_dup_embedding_batch(empty),
+        "topk": sim.cosine_topk(
+            empty, empty.withColumnRenamed("vec_id", "qid")),
+    }
+    assert {k: (df.columns, df.count()) for k, df in got.items()} == {
+        "pairs": (["id_a", "id_b", "sim"], 0),
+        "hot": (["band", "key", "size"], 0),
+        "batch": (["id_a", "id_b", "band"], 0),
+        "topk": (["qid", "vec_id", "sim", "sim_rank"], 0),
+    }
+
+
 def test_dot_and_norm_columns(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"a": [[1.0, 2.0, 3.0]], "b": [[4.0, 5.0, 6.0]]})
