@@ -1,13 +1,16 @@
 """Cell-index functions for DataFrames.
 
 The primary implementation is **pure Column expressions** (Morton bit
-spread via shiftleft/bitwiseAND), so cell encoding runs inside
-whole-stage codegen on the JVM — zero Python/Arrow crossings in the hot
-path. This strictly dominates the Arrow-UDF variant the spec floats
-("vectorized Arrow UDF, never per-row Python", BASELINE.json): batching
-is still columnar, but without serialization. The pandas-UDF variant is
-kept (``cell_encode_pandas``) for A/B benchmarking and as the template
-for kernels that genuinely need numpy.
+spread by byte-table lookup), so cell encoding runs inside whole-stage
+codegen on the JVM — zero Python/Arrow crossings in the hot path. Where
+the only other work is JVM work, this beats the Arrow-UDF variant the
+spec floats ("vectorized Arrow UDF, never per-row Python",
+BASELINE.json): batching is still columnar, but without serialization.
+Inside a UDF that already crosses to Python the numpy kernel
+(:func:`o2g_spark.kernels.cells.encode`) is free, and a Column encode
+only adds plan and codegen cost — point-in-polygon encodes there. The
+pandas-UDF variant is kept (``cell_encode_pandas``) for A/B benchmarking
+and as the template for kernels that genuinely need numpy.
 
 Bit layout must stay identical to :mod:`o2g_spark.kernels.cells`
 (tests assert all three implementations — Column, numpy, DuckDB SQL —
@@ -23,20 +26,24 @@ from pyspark.sql import types as T
 
 from ..kernels import cells
 
-_MASKS = (
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-)
+# bit i of a byte moves to bit 2i: the Morton spread of every byte value
+_SPREAD8 = "array({})".format(", ".join(
+    f"{sum(((b >> i) & 1) << (2 * i) for i in range(8))}L" for b in range(256)
+))
 
 
-def _spread_col(v: Column) -> Column:
-    v = v.cast(T.LongType())
-    for shift, mask in _MASKS:
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
-    return v
+def _spread_col(v: Column, res: int) -> Column:
+    """Spread the low ``res`` bits of ``v`` (``0 <= v < 2^res``) to the
+    even bit positions, one table lookup per byte. ``v`` appears once per
+    byte: the shift-and-mask rounds of :mod:`o2g_spark.kernels.cells`
+    read it twice per round, which doubles the tree 5 times (32 copies of
+    ``v`` to build, analyse and optimise)."""
+    v, table = v.cast(T.LongType()), F.expr(_SPREAD8)
+    out = table[v.bitwiseAND(F.lit(255))]
+    for k in range(1, -(-res // 8)):
+        byte = F.shiftright(v, 8 * k).bitwiseAND(F.lit(255))
+        out = out.bitwiseOR(F.shiftleft(table[byte], 16 * k))
+    return out
 
 
 def _scaled_floor(v: Column, offset: float, extent: float, res: int) -> Column:
@@ -58,8 +65,9 @@ def grid_iy(lat: Column | str, res: int) -> Column:
 
 
 def cell_from_ixiy(ix: Column, iy: Column, res: int) -> Column:
-    """(ix, iy) integer Columns → int64 cell id — pure JVM Morton encode."""
-    morton = _spread_col(ix).bitwiseOR(F.shiftleft(_spread_col(iy), 1))
+    """(ix, iy) integer Columns in ``[0, 2^res)`` → int64 cell id — pure
+    JVM Morton encode."""
+    morton = _spread_col(ix, res).bitwiseOR(F.shiftleft(_spread_col(iy, res), 1))
     return morton.bitwiseOR(F.lit(res << 58))
 
 
@@ -71,7 +79,7 @@ def cell_encode(lat: Column | str, lon: Column | str, res: int) -> Column:
     lon = F.col(lon) if isinstance(lon, str) else lon
     ix = _scaled_floor(lon, 180.0, 360.0, res)
     iy = _scaled_floor(lat, 90.0, 180.0, res)
-    morton = _spread_col(ix).bitwiseOR(F.shiftleft(_spread_col(iy), 1))
+    morton = _spread_col(ix, res).bitwiseOR(F.shiftleft(_spread_col(iy, res), 1))
     return morton.bitwiseOR(F.lit(res << 58)).alias(f"cell_r{res}")
 
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import _delta_index as D
-from .similarity import cosine_prenormed, lsh_band_keys_udf, norm
+from .similarity import cosine_prenormed, lsh_band_keys_udf, norm, vector_dim
 
 BANDS_STAGE = "emb_bands"
 VECS_STAGE = "emb_vecs"
@@ -81,8 +81,12 @@ def emb_index_build(
     key prefix) and the vectors for cosine verification. Idempotent;
     ``force=True`` retires the old snapshots (createOrReplace)."""
     if dim is None:
-        first = vecs.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"])
+        dim = vector_dim(vecs, vec_col)
+        if dim == 0:
+            # the width is stored in the index params: it cannot be guessed
+            raise ValueError(
+                f"no non-null vector in {vec_col!r} to take the index width "
+                "from: pass dim=")
     params = {"bands": bands, "bits_per_band": bits_per_band,
               "seed": seed, "dim": dim, "id_col": id_col}
     SPEC.build(spark, base_dir, params,

@@ -18,13 +18,19 @@ cut at every range end into sorted breakpoints, and a CSR table lists
 each elementary segment's ``(zone_id, is_boundary)`` entries (zones may
 overlap). One broadcast ships it with the rings, memoised per session.
 
-**One Arrow UDF per point.** The JVM computes the resolution-R code
-(``cellfns.cell_encode``); an iterator Arrow UDF finds its segment with
-one ``searchsorted``, accepts interior entries, ray-casts boundary ones
-and returns the zone ids as ``array<bigint>``. ``pip_join`` explodes
-them; ``pip_anti`` keeps the points whose list is empty, so each point
-row lands in exactly one of the two. The plan is map-only over the
-points: no join, no exchange; only the boundary sliver pays geometry.
+**One Arrow UDF per point.** The UDF receives only ``lon`` and ``lat``.
+It encodes each point's resolution-R code with the same numpy kernel
+that built the covers (``kernels.cells.encode``), so the codes match the
+ranges by construction. It finds each point's segment with one
+``searchsorted``, accepts interior entries, ray-casts boundary ones and
+returns the zone ids as ``array<bigint>``. A point with a null, NaN or
+infinite coordinate is in no zone. A finite point off the grid is
+ray-cast against the zones whose rings reach past the grid, the only
+ones that can hold it. ``pip_join`` explodes the lists; ``pip_anti``
+keeps the points whose list is empty, so each point row lands in
+exactly one of the two. The plan is map-only over the points: no join,
+no exchange, no JVM cell expression; only the boundary sliver pays
+geometry.
 """
 
 from __future__ import annotations
@@ -40,7 +46,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import session
-from ..functions import cellfns
 from ..kernels import cells, geometry
 
 _MORTON_MASK = (1 << 58) - 1
@@ -136,67 +141,93 @@ def _digest(rings_by_zone, res: int, base_res: int | None) -> str:
     return h.hexdigest()
 
 
+def _build_index(rings_by_zone, res: int, base_res: int | None):
+    """``(R, bp, indptr, ent_zone, ent_bnd, rings, outer)`` of a zone set:
+    the interval index at resolution ``R``, the rings, and the ids of the
+    zones that reach past the grid (``outer``), the only zones a point
+    off the grid can lie in."""
+    R, *lookup = _interval_index(*_cover_arrays(rings_by_zone, res, base_res))
+    rings = {
+        int(z): [np.asarray(r, dtype=np.float64) for r in rs]
+        for z, rs in rings_by_zone.items()
+    }
+    outer = [
+        z for z, rs in rings.items()
+        if any((np.abs(r) > (180.0, 90.0)).any() for r in rs)
+    ]
+    return (R, *lookup, rings, np.asarray(outer, np.int64))
+
+
 def _zone_index(
     spark: SparkSession,
     rings_by_zone: dict[int, list[np.ndarray]],
     res: int,
     base_res: int | None,
 ):
-    """``(R, broadcast)`` for a zone set, built once per (session, zone
-    set). The broadcast holds ``(bp, indptr, ent_zone, ent_bnd, rings)``."""
-
-    def build():
-        R, *index = _interval_index(*_cover_arrays(rings_by_zone, res, base_res))
-        rings = {
-            int(z): [np.asarray(r, dtype=np.float64) for r in rs]
-            for z, rs in rings_by_zone.items()
-        }
-        return R, spark.sparkContext.broadcast((*index, rings))
-
+    """The broadcast :func:`_build_index` of a zone set, built once per
+    (session, zone set)."""
     key = ("pip.zone_index", _digest(rings_by_zone, res, base_res))
-    return session.session_memo(spark, key, build)
+    return session.session_memo(
+        spark, key,
+        lambda: spark.sparkContext.broadcast(_build_index(rings_by_zone, res, base_res)),
+    )
+
+
+def _point_zones(index, x: np.ndarray, y: np.ndarray):
+    """Zones containing each point (``x`` lon, ``y`` lat, NaN for null)
+    as CSR ``(offsets, zone_ids)``. A point with a non-finite coordinate
+    is in no zone; a point off the grid is ray-cast against the ``outer``
+    zones; every other point looks up the segment of its resolution-R
+    code. No NaN or infinity reaches an integer cast."""
+    R, bp, indptr, ent_zone, ent_bnd, rings, outer = index
+    n = len(x)
+    finite = np.isfinite(x) & np.isfinite(y)
+    grid = finite & (np.abs(x) <= 180.0) & (np.abs(y) <= 90.0)
+    j = np.zeros(n, np.int64)
+    code = cells.encode(y[grid], x[grid], R) & _MORTON_MASK
+    j[grid] = np.searchsorted(bp, code, "right")
+    row, ent = _expand(indptr[j], indptr[j + 1] - indptr[j])
+    zone, bnd = ent_zone[ent], ent_bnd[ent]
+    off = np.flatnonzero(finite & ~grid)
+    if len(off) and len(outer):
+        row = np.concatenate([row, np.repeat(off, len(outer))])
+        zone = np.concatenate([zone, np.tile(outer, len(off))])
+        bnd = np.concatenate([bnd, np.ones(len(off) * len(outer), bool)])
+        order = np.argsort(row, kind="stable")
+        row, zone, bnd = row[order], zone[order], bnd[order]
+    keep, refine = ~bnd, np.flatnonzero(bnd)
+    rz = zone[refine]
+    for z in np.unique(rz):
+        idx = refine[rz == z]
+        keep[idx] = geometry.points_in_polygon(x[row[idx]], y[row[idx]], rings[int(z)])
+    offsets = np.zeros(n + 1, np.int32)
+    np.cumsum(np.bincount(row[keep], minlength=n), out=offsets[1:])
+    return offsets, zone[keep]
 
 
 def _zones_udf(bc):
-    """Iterator Arrow UDF: (code, lon, lat) → array<bigint> of the zones
-    containing each point (empty for a null code)."""
+    """Iterator Arrow UDF: (lon, lat) → array<bigint> of the zones
+    containing each point (empty for a null or non-finite coordinate)."""
 
     def pip_zones(
-        batches: Iterator[Tuple[pa.Array, pa.Array, pa.Array]],
+        batches: Iterator[Tuple[pa.Array, pa.Array]],
     ) -> Iterator[pa.Array]:
-        bp, indptr, ent_zone, ent_bnd, rings = bc.value  # once per task
-        for code, lon, lat in batches:
-            n = len(code)
-            valid = code.is_valid().to_numpy(zero_copy_only=False)
-            c = code.fill_null(0).to_numpy() & _MORTON_MASK
-            j = np.where(valid, np.searchsorted(bp, c, "right"), 0)
-            row, ent = _expand(indptr[j], indptr[j + 1] - indptr[j])
-            zone, keep = ent_zone[ent], ~ent_bnd[ent]
-            refine = np.flatnonzero(ent_bnd[ent])
-            if len(refine):
-                x = lon.fill_null(np.nan).to_numpy(zero_copy_only=False)
-                y = lat.fill_null(np.nan).to_numpy(zero_copy_only=False)
-                rz = zone[refine]
-                for z in np.unique(rz):
-                    idx = refine[rz == z]
-                    pr = row[idx]
-                    keep[idx] = geometry.points_in_polygon(x[pr], y[pr], rings[int(z)])
-            offsets = np.zeros(n + 1, np.int32)
-            np.cumsum(np.bincount(row[keep], minlength=n), out=offsets[1:])
-            yield pa.ListArray.from_arrays(pa.array(offsets), pa.array(zone[keep]))
+        index = bc.value  # once per task
+        for lon, lat in batches:
+            offsets, zones = _point_zones(
+                index,
+                lon.to_numpy(zero_copy_only=False),  # nulls → NaN
+                lat.to_numpy(zero_copy_only=False),
+            )
+            yield pa.ListArray.from_arrays(pa.array(offsets), pa.array(zones))
 
     return F.arrow_udf(pip_zones, T.ArrayType(T.LongType()))
 
 
 def _with_zones(points, rings_by_zone, res, base_res, lat_col, lon_col):
-    R, bc = _zone_index(points.sparkSession, rings_by_zone, res, base_res)
-    lat, lon = F.col(lat_col), F.col(lon_col)
-    # cell_encode clamps a null or NaN coordinate onto the grid edge;
-    # such a point is in no zone, so it gets a null code (no zones)
-    located = lat.isNotNull() & lon.isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
-    code = F.when(located, cellfns.cell_encode(lat, lon, R))
-    zones = _zones_udf(bc)(code, lon, lat)
-    return points.withColumn("__zones", zones)
+    bc = _zone_index(points.sparkSession, rings_by_zone, res, base_res)
+    lon, lat = (F.col(c).cast(T.DoubleType()) for c in (lon_col, lat_col))
+    return points.withColumn("__zones", _zones_udf(bc)(lon, lat))
 
 
 def pip_join(

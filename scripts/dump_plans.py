@@ -18,7 +18,7 @@ import __spark_entry__ as E  # noqa: E402
 from o2g_spark.session import get_spark  # noqa: E402
 
 SHOW = [
-    "pip_rows",        # cover join: broadcast, map-only point side
+    "pip_rows",        # interval lookup: one Arrow UDF per point, map-only
     "tile_assign",     # pure-column tile math in codegen
     "knn",             # one k-ring round shape
     "join_star",       # dimension broadcasts

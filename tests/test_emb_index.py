@@ -141,6 +141,15 @@ def test_param_mismatch_and_missing_index_raise(spark, corpus, tmp_path):
             spark, base, corpus.filter("vec_id >= 80"))
 
 
+def test_build_on_empty_frame_needs_dim(spark, corpus, tmp_path):
+    """The width is stored in the index params, so a build over a frame
+    with no vector cannot probe it: it asks for dim= instead of failing
+    on the missing row."""
+    with pytest.raises(ValueError, match="pass dim="):
+        emb_index.emb_index_build(spark, str(tmp_path / "emb"), corpus.limit(0),
+                                  bands=NB, bits_per_band=BITS)
+
+
 def test_bands_snapshot_partitioned_by_band(spark, corpus, tmp_path):
     import os
 

@@ -24,7 +24,7 @@ def _pts_df(spark, n=4000):
 
 def test_cell_encode_column_matches_numpy_and_sql(spark):
     df, pdf = _pts_df(spark)
-    for res in (3, 9, 12):
+    for res in (3, 9, 12, 20, 29):
         got = (
             df.select("id", cellfns.cell_encode("lat", "lon", res).alias("c"))
             .orderBy("id")
@@ -48,6 +48,27 @@ def test_cell_encode_jvm_plan_is_codegen(spark):
         cellfns.cell_encode("lat", "lon", 9)
     )._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_cell_encode_expression_is_linear(spark):
+    """The Morton spread reads each grid index once per byte (a table
+    lookup), not twice per shift round: the analysed cell_encode holds at
+    most 4 FLOOR per coordinate (the shift rounds held 32). cell_from_ixiy
+    shares the spread and still equals the numpy encode at res 29."""
+    df, _ = _pts_df(spark, 10)
+    for res in (14, 29):
+        analysed = df.select(
+            cellfns.cell_encode("lat", "lon", res)
+        )._jdf.queryExecution().analyzed().toString()
+        assert 0 < analysed.count("FLOOR(") <= 8, res
+    ix, iy = rng.integers(0, 1 << 29, (2, 500))
+    pdf = pd.DataFrame({"id": np.arange(500), "ix": ix, "iy": iy})
+    got = (
+        spark.createDataFrame(pdf)
+        .select("id", cellfns.cell_from_ixiy(F.col("ix"), F.col("iy"), 29).alias("c"))
+        .orderBy("id").toPandas()["c"].to_numpy()
+    )
+    assert (got == cells.ixiy_to_cell(ix, iy, 29)).all()
 
 
 def test_cell_parent_column(spark):

@@ -153,25 +153,47 @@ def test_pip_join_and_anti_partition_points_with_nulls(spark, zones_pdf):
 
 
 def test_pip_null_and_nan_coordinates_in_no_zone(spark):
-    """cell_encode clamps a null or NaN coordinate to grid index 0, so
-    unchecked such a point looks up the cell at lat -90 / lon -180. A
-    zone covering that corner must still not take it in: the numpy ray
-    cast puts every such point outside."""
+    """Every point lands where the numpy ray cast puts it, whatever its
+    coordinates: a null, NaN or infinite coordinate is in no zone (the
+    grid clamps such a point onto a corner cell that zone 7 covers), and
+    a point off the grid (lon 200, lat -95, or inside zone 7's margin past
+    the grid edge) is decided by the ray cast alone, never by the clamped
+    edge cell. Zone 8 touches lon 180 from inside the grid. The kernel
+    raises no numpy warning on any of them."""
+    import warnings
+
+    inf = float("inf")
     ring = np.array([(-180.5, -90.5), (180.5, -90.5), (180.5, -60.0), (-180.5, -60.0)])
-    rings = {7: [ring]}
+    edge = np.array([(170.0, -10.0), (180.0, -10.0), (180.0, 10.0), (170.0, 10.0)])
+    rings = {7: [ring], 8: [edge]}
     pts = spark.createDataFrame(
         [(1, None, 1.0), (2, float("nan"), 1.0), (3, -70.0, None),
-         (4, 1.0, float("nan")), (5, None, None), (6, -70.0, 1.0)],
+         (4, 1.0, float("nan")), (5, None, None), (6, -70.0, 1.0),
+         (7, -70.0, inf), (8, -70.0, -inf), (9, inf, 1.0), (10, -70.0, 200.0),
+         (11, -95.0, 1.0), (12, 0.0, 200.0), (13, 0.0, inf), (14, 0.0, 175.0),
+         (15, -70.0, 180.25), (16, -90.25, 1.0)],
         "pid long, lat double, lon double",
     )
     pdf = pts.toPandas()
-    inside = geometry.points_in_polygon(
-        pdf["lon"].to_numpy(float), pdf["lat"].to_numpy(float), [ring])
-    assert set(pdf.pid[inside]) == {6}
+    x, y = pdf["lon"].to_numpy(float), pdf["lat"].to_numpy(float)
+    exp = sorted(
+        (int(p), z) for z, rg in rings.items()
+        for p in pdf.pid[geometry.points_in_polygon(x, y, rg)]
+    )
+    assert exp == [(6, 7), (14, 8), (15, 7), (16, 7)]
     for res in (8, 14):
-        joined = [(r.pid, r.zone_id) for r in pip.pip_join(pts, rings, res=res).collect()]
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            offsets, zones = pip._point_zones(pip._build_index(rings, res, None), x, y)
+        got = sorted(
+            (int(pdf.pid[i]), int(z))
+            for i in range(len(x)) for z in zones[offsets[i]:offsets[i + 1]]
+        )
+        assert got == exp, res
+        joined = sorted((r.pid, r.zone_id) for r in pip.pip_join(pts, rings, res=res).collect())
         anti = sorted(r.pid for r in pip.pip_anti(pts, rings, res=res).collect())
-        assert joined == [(6, 7)] and anti == [1, 2, 3, 4, 5], res
+        assert joined == exp, res
+        assert anti == sorted(set(pdf.pid) - {p for p, _ in exp}), res
 
 
 def test_pip_plan_is_map_only(spark, zones_pdf):
@@ -179,7 +201,9 @@ def test_pip_plan_is_map_only(spark, zones_pdf):
     exchange, exactly one ArrowEvalPython (below the explode for
     pip_join), and the optimized plan calls the pip UDF once — no
     inferred pre-explode Filter re-evaluating it (the
-    InferFiltersFromGenerate exclusion in session.py)."""
+    InferFiltersFromGenerate exclusion in session.py). The UDF encodes
+    the points itself: no JVM cell expression (FLOOR, shiftleft) is
+    left in the plan."""
     rings = synth.zone_rings(zones_pdf)
     pts = spark.createDataFrame(_points(100))
     for df, below in (
@@ -191,7 +215,9 @@ def test_pip_plan_is_map_only(spark, zones_pdf):
         assert "Join" not in plan and "Exchange" not in plan
         assert plan.count("ArrowEvalPython") == 1
         assert plan.index(below) < plan.index("ArrowEvalPython")
-        assert qe.optimizedPlan().toString().count("pip_zones(") == 1
+        optimized = qe.optimizedPlan().toString()
+        assert optimized.count("pip_zones(") == 1
+        assert "FLOOR(" not in optimized and "shiftleft(" not in optimized
 
 
 def test_cell_encode_hierarchy(spark):

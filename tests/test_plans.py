@@ -48,13 +48,18 @@ def test_dim_joins_are_broadcast(spark, sf_dir):
 def test_pip_join_no_shuffle_on_point_side(spark, sf_dir):
     """PIP is map-only over the points: no join and no Exchange between
     the parquet scan and the output, one ArrowEvalPython below the
-    explode, and the pip UDF called once in the optimized plan."""
-    df = E.queries()["pip_rows"](spark, sf_dir)
-    plan = _plan(df)
-    assert "Join" not in plan and "Exchange" not in plan
-    assert plan.count("ArrowEvalPython") == 1
-    assert plan.index("Generate") < plan.index("ArrowEvalPython")
-    assert _optimized(df).count("pip_zones(") == 1
+    explode (the filter for pip_anti), the pip UDF called once in the
+    optimized plan, and no JVM cell expression (FLOOR, shiftleft) in it:
+    the UDF encodes the points itself."""
+    for name, below in (("pip_rows", "Generate"), ("pip_anti", "Filter")):
+        df = E.queries()[name](spark, sf_dir)
+        plan = _plan(df)
+        assert "Join" not in plan and "Exchange" not in plan, name
+        assert plan.count("ArrowEvalPython") == 1, name
+        assert plan.index(below) < plan.index("ArrowEvalPython"), name
+        optimized = _optimized(df)
+        assert optimized.count("pip_zones(") == 1, name
+        assert "FLOOR(" not in optimized and "shiftleft(" not in optimized, name
 
 
 def test_whole_stage_codegen_hot_path(spark, sf_dir):
