@@ -101,47 +101,3 @@ def cell_encode_pandas(res: int):
         return pd.Series(cells.encode(lat.to_numpy(), lon.to_numpy(), res))
 
     return _encode
-
-
-def k_ring_cells(res: int):
-    """Arrow UDF: (lat, lon, k) is static — returns array of ring cells.
-
-    Used by the kNN driver loop: per point, the hollow ring of cells at
-    Chebyshev distance exactly ``k``; array column is then exploded and
-    equi-joined against the target cell index. numpy-batched.
-    """
-
-    def make(k: int):
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def _ring(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            import numpy as np
-
-            la = lat.to_numpy()
-            lo = lon.to_numpy()
-            ix, iy = cells.latlon_to_ixiy(la, lo, res)
-            n = 1 << res
-            out = []
-            if k == 0:
-                cid = cells.ixiy_to_cell(ix, iy, res)
-                return pd.Series([[int(c)] for c in cid])
-            # offsets on the hollow ring at Chebyshev distance k
-            offs = [
-                (dx, dy)
-                for dx in range(-k, k + 1)
-                for dy in range(-k, k + 1)
-                if max(abs(dx), abs(dy)) == k
-            ]
-            offs = np.asarray(offs, dtype=np.int64)  # (m, 2)
-            gx = ix[:, None] + offs[None, :, 0]
-            gy = iy[:, None] + offs[None, :, 1]
-            valid = (gx >= 0) & (gx < n) & (gy >= 0) & (gy < n)
-            cid = cells.ixiy_to_cell(
-                np.clip(gx, 0, n - 1), np.clip(gy, 0, n - 1), res
-            )
-            for i in range(len(la)):
-                out.append([int(c) for c in cid[i][valid[i]]])
-            return pd.Series(out)
-
-        return _ring
-
-    return make

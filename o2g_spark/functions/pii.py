@@ -107,10 +107,3 @@ SELECT {id_col},
        {counts}
 FROM ({docs_query})
 """
-
-
-def pii_report_sql(docs_query: str, id_col: str, text_col: str) -> str:
-    return (
-        f"SELECT {id_col}, n_email, n_ipv4, n_phone FROM "
-        f"({scrub_pii_sql(docs_query, id_col, text_col)})"
-    )

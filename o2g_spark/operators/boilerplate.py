@@ -138,18 +138,6 @@ FROM (SELECT {id_col}, string_split({text_col}, {sep_sql}) AS __ls
 """
 
 
-def line_stats_sql(
-    docs_query: str, id_col: str, text_col: str, sep_sql: str = "chr(10)"
-) -> str:
-    """DuckDB twin of :func:`line_stats` (zipped unnest = posexplode)."""
-    return f"""
-SELECT __line AS line, CAST(count(*) AS BIGINT) AS line_df
-FROM (SELECT DISTINCT {id_col}, __line
-      FROM ({_lines_sql(docs_query, id_col, text_col, sep_sql)}))
-GROUP BY __line
-"""
-
-
 def strip_boilerplate_sql(
     docs_query: str,
     id_col: str,

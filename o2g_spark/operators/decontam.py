@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import text as X
+from .dedup import shingle_hashes
 
 
 def benchmark_ngrams(
@@ -35,7 +36,7 @@ def benchmark_ngrams(
     generator expressions interpreted, re-running the regex+md5 chain
     per emitted row otherwise)."""
     return (
-        bench.withColumn("__hs", F.transform(X.shingles(text_col, n), X.md5_hash60))
+        bench.withColumn("__hs", shingle_hashes(text_col, n))
         .select(F.explode("__hs").alias("__h"))
         .distinct()
     )
@@ -70,9 +71,7 @@ def contamination_report(
     if broadcast_bench:
         bg = F.broadcast(bg)
     grams = (
-        docs.withColumn(
-            "__hs", F.transform(X.shingles(text_col, n), X.md5_hash60)
-        )
+        docs.withColumn("__hs", shingle_hashes(text_col, n))
         .withColumn("__total", F.size("__hs").cast(T.LongType()))
         .select(id_col, "__total", F.explode("__hs").alias("__h"))
     )

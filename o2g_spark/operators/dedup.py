@@ -317,14 +317,15 @@ def _pair_intersections(
 
 def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(__id, __sz, __hset) projection shared by :func:`jaccard_pairs`,
-    :func:`containment_pairs` and :func:`jaccard_dropped_shingles` —
-    ONE plan shape, so Spark's plan-keyed CacheManager lets the counter
-    read the frame jaccard_pairs cached instead of re-shingling the
-    corpus (measured: the counter doubled the pipeline dedup stage
-    before this). ``__hset`` is the 60-bit md5 of each shingle, ``__sz``
-    the full set size. Since the r6 count-based verification the raw
-    shingle STRINGS never leave this projection — the cache holds only
-    8-byte hashes (≈¼ the bytes of the old string+hash cache).
+    :func:`containment_pairs`, :func:`jaccard_dropped_shingles` and
+    :func:`minhash_lsh_pairs` — ONE plan shape, so Spark's plan-keyed
+    CacheManager lets the counter and the LSH signature read the frame
+    jaccard_pairs cached instead of re-shingling the corpus (measured:
+    the counter doubled the pipeline dedup stage before this).
+    ``__hset`` is the 60-bit md5 of each shingle, ``__sz`` the full set
+    size. Since the r6 count-based verification the raw shingle STRINGS
+    never leave this projection — the cache holds only 8-byte hashes
+    (≈¼ the bytes of the old string+hash cache).
     Repartition first: small corpora arrive as one parquet partition
     and the regex+sort shingle pass would run single-threaded."""
     par = df.sparkSession.sparkContext.defaultParallelism
@@ -378,7 +379,8 @@ def containment_pairs(
 
     Same scale machinery as :func:`jaccard_pairs`: hashed-shingle
     inverted-index candidates (df-capped by default — the cap warning
-    and semantics are shared), exact string-set verification. Output:
+    and semantics are shared), verified by counting the shared hashed
+    shingles (see :func:`_pair_intersections`). Output:
     one row per candidate pair (id_a < id_b) with BOTH directions —
     (id_a, id_b, cont_a_in_b, cont_b_in_a), kept when either side
     ≥ threshold, rounded 6dp."""
@@ -527,13 +529,42 @@ def minhash_from_hashes(h_col, num_hashes: int = 32) -> F.Column:
     return F.transform(F.array(h), _build)[0]
 
 
+def md5_band_keys(sig, num_hashes: int, bands: int) -> F.Column:
+    """``bands`` structs (band int, key string) over a minhash signature:
+    key = md5 of the band's slot values joined by ",". The persisted LSH
+    index stores these keys on disk and the stream near-dup ops in
+    state, so the formula is frozen (tests/fixtures/index_v1, stream_v1).
+    :func:`minhash_lsh_pairs` keys its bands with xxhash64 instead: its
+    keys never leave the query, and md5 measured slower there (r6).
+
+    The signature is LET-BOUND (transform over a 1-element array), so a
+    signature EXPRESSION evaluates once per row, not once per band
+    (plan shape pinned in test_letbind)."""
+    rpb = num_hashes // bands
+
+    def _bands_of(s: F.Column) -> F.Column:
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.struct(
+                b.cast("int").alias("band"),
+                F.md5(
+                    F.concat_ws(",", F.transform(
+                        F.slice(s, b * rpb + 1, rpb),
+                        lambda v: v.cast("string"),
+                    ))
+                ).alias("key"),
+            ),
+        )
+
+    s = F.col(sig) if isinstance(sig, str) else sig
+    return F.transform(F.array(s), _bands_of)[0]
+
+
 def minhash_signature(text_col: str, num_hashes: int = 32) -> F.Column:
     """One-expression convenience (oracle-checked queries). For the LSH
     operator path use shingle_hashes + minhash_from_hashes so the md5
     pass materializes once."""
-    return minhash_from_hashes(
-        F.transform(X.shingles(text_col, 3), X.md5_hash60), num_hashes
-    )
+    return minhash_from_hashes(shingle_hashes(text_col, 3), num_hashes)
 
 
 def minhash_from_hashes_sql(hs_expr: str, num_hashes: int = 32) -> str:
@@ -569,35 +600,28 @@ def minhash_lsh_pairs(
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     rpb = num_hashes // bands
-    # three separate projections so the optimizer keeps each expensive
-    # pass (regex shingling, md5 hashing) evaluated exactly once;
-    # cache_latest because the self-join + verify re-scan this 3×
-    # (bounded: each call releases the previous call's cache)
-    # repartition first: the shingle+md5+minhash pass is the expensive
-    # part and small corpora arrive as one parquet partition.
-    # The cache keeps the HASHED shingle array (__h), not the strings:
-    # verification intersects 8-byte longs instead of 30-40-byte
-    # strings (¼ the cache bytes, cheaper per-pair intersects); a
-    # cross-doc 60-bit collision (P ≈ 2⁻⁶⁰ per shingle pair) would
-    # shift one pair's jaccard by one shingle — the gate's value-hash
-    # against the raw-string DuckDB twin pins its absence on real data.
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # over jaccard_pairs' shingle-set plan: after jaccard_pairs on the
+    # same frame, CacheManager builds this cache over jaccard's cached
+    # sets, so the corpus is shingled once. cache_latest because the
+    # self-join + verify re-scan this 3×. Verification intersects the
+    # hashed shingles; a cross-doc 60-bit collision (P ≈ 2⁻⁶⁰ per
+    # shingle pair) would shift one pair's jaccard by one shingle — the
+    # gate's value-hash against the raw-string DuckDB twin pins its
+    # absence on real data.
     sig = cache_latest(
         "dedup.minhash_lsh.sig",
-        df.repartition(par, id_col)
-        .select(F.col(id_col).alias("__id"), X.shingles(text_col, 3).alias("__sh"))
-        .withColumn("__h", F.transform(F.col("__sh"), X.md5_hash60))
-        .withColumn("__sig", minhash_from_hashes("__h", num_hashes))
-        .drop("__sh"),
+        _shingle_sets(df, id_col, text_col, 3).withColumn(
+            "__sig", minhash_from_hashes("__hset", num_hashes)
+        ),
     )
     # bands shuffle only (id, band, 8-byte key) — shingle arrays are
     # joined back per candidate pair afterwards, never multiplied ×bands.
-    # Band key = xxhash64 over the band's raw slot longs (codegen) —
-    # r6: replaced md5(concat_ws(cast-to-string…)), which built two
-    # strings per band row. The key only GENERATES candidates (equal
-    # bands ⇒ equal keys, so no true candidate is lost; a key collision
-    # merely adds a pair that exact-jaccard verification then scores),
-    # so the hash choice cannot change the output.
+    # Band key = xxhash64 over the band's raw slot longs (codegen), not
+    # the stored md5 key of :func:`md5_band_keys` — see there. The key
+    # only GENERATES candidates (equal bands ⇒ equal keys, so no true
+    # candidate is lost; a key collision merely adds a pair that
+    # exact-jaccard verification then scores), so the hash choice
+    # cannot change the output.
     band_arr = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(
@@ -624,11 +648,13 @@ def minhash_lsh_pairs(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    sha = sig.select(F.col("__id").alias("id_a"), F.col("__h").alias("__sha"))
-    shb = sig.select(F.col("__id").alias("id_b"), F.col("__h").alias("__shb"))
+    sha = sig.select(F.col("__id").alias("id_a"), F.col("__sz").alias("sz_a"),
+                     F.col("__hset").alias("__sha"))
+    shb = sig.select(F.col("__id").alias("id_b"), F.col("__sz").alias("sz_b"),
+                     F.col("__hset").alias("__shb"))
     cand = pairs.join(sha, "id_a").join(shb, "id_b")
     inter = F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
-    union = F.size(F.col("__sha")) + F.size(F.col("__shb")) - inter
+    union = F.col("sz_a") + F.col("sz_b") - inter
     return (
         cand.withColumn("jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6))
         .filter(F.col("jaccard") >= threshold)

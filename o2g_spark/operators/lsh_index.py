@@ -18,11 +18,13 @@ SQL twin): banding is per-doc deterministic, so splitting the corpus
 cannot change any pair's candidacy or score. (old, old) pairs are the
 previous increments' output — never recomputed.
 
-Band-key formula is IDENTICAL to ``minhash_lsh_pairs`` /
-``streaming.stateful._banded_docs`` (same signature family, same
-per-band md5-of-slice key) — the manifests record (num_hashes, bands,
-shingle_n) and the pairing call validates them, so an index built
-under one banding can never silently pair under another.
+Band keys come from ``dedup.md5_band_keys`` — the md5-of-slice key
+``streaming.stateful._banded_docs`` also uses, over the same signature
+family as ``minhash_lsh_pairs`` (whose in-query keys are xxhash64, so
+the candidate set is the same but the key values differ). The
+manifests record (num_hashes, bands, shingle_n) and the pairing call
+validates them, so an index built under one banding can never silently
+pair under another.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as X
 from . import _delta_index as D
-from .dedup import minhash_from_hashes
+from .dedup import md5_band_keys, minhash_from_hashes
 
 BANDS_STAGE = "lsh_bands"
 SHINGLES_STAGE = "lsh_shingles"
@@ -52,47 +54,17 @@ def _shingle_rows(
 
 def _band_rows(sh: DataFrame, params: dict) -> DataFrame:
     """(did, band, key) — one row per (doc, band), derived from the
-    shingle sets. Same banding expressions as minhash_lsh_pairs;
+    shingle sets through :func:`.dedup.md5_band_keys`;
     project-then-explode, because GenerateExec evaluates a computed
-    generator array interpreted.
-
-    The signature is LET-BOUND (transform over a 1-element array): as
-    the outer transform's INPUT it evaluates once per row, whereas a
-    reference inside the band lambda would re-derive the whole
-    md5+minhash pass per BAND (plan shape pinned in test_letbind)."""
-    num_hashes, bands = params["num_hashes"], params["bands"]
-    rpb = num_hashes // bands
-
-    def _bands_of(s: F.Column) -> F.Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.cast("int").alias("band"),
-                F.md5(
-                    F.concat_ws(",", F.transform(
-                        F.slice(s, b * rpb + 1, rpb),
-                        lambda v: v.cast("string"),
-                    ))
-                ).alias("key"),
-            ),
-        )
-
-    sig = minhash_signature_from_shingles("sh", num_hashes)
+    generator array interpreted."""
+    num_hashes = params["num_hashes"]
+    sig = minhash_from_hashes(F.transform("sh", X.md5_hash60), num_hashes)
     return (
-        sh.select("did", F.transform(F.array(sig), _bands_of)[0]
+        sh.select("did", md5_band_keys(sig, num_hashes, params["bands"])
                   .alias("__bands"))
         .withColumn("__b", F.explode("__bands"))
         .select("did", F.col("__b.band").alias("band"),
                 F.col("__b.key").alias("key"))
-    )
-
-
-def minhash_signature_from_shingles(sh_col: str, num_hashes: int):
-    """Minhash signature Column from an ALREADY-shingled array column —
-    the same hash-once pipeline as dedup.minhash_signature (one md5
-    pass + affine integer re-hashes) without re-running the shingler."""
-    return minhash_from_hashes(
-        F.transform(F.col(sh_col), X.md5_hash60), num_hashes
     )
 
 

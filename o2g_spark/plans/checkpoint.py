@@ -45,6 +45,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def lineage_df(
@@ -182,6 +183,14 @@ class CheckpointManager:
                 return os.path.join(self._stage_dir(stage), "snapshots", name)
         return None
 
+    def _read(self, data_dir: str, manifest: dict) -> DataFrame:
+        """Committed data, read with the schema its manifest records: a
+        partitioned write of no rows leaves no file to infer one from."""
+        reader = self.spark.read
+        if manifest.get("schema"):
+            reader = reader.schema(StructType.fromJson(manifest["schema"]))
+        return reader.parquet(data_dir)
+
     def read_snapshot(self, stage: str, snapshot_id: str | None = None) -> DataFrame:
         """Time travel: read a stage AS OF a snapshot id (default: the
         current snapshot). Retired snapshots stay readable until
@@ -192,14 +201,15 @@ class CheckpointManager:
         if snapshot_id is None or (cur and cur.get("snapshot_id") == snapshot_id):
             if not (cur and cur.get("committed")):
                 raise FileNotFoundError(f"stage {stage!r} has no committed snapshot")
-            return self.spark.read.parquet(os.path.join(sdir, "data"))
+            return self._read(os.path.join(sdir, "data"), cur)
         hist = self._history_dir_for(stage, snapshot_id)
         if hist is None or not os.path.isdir(os.path.join(hist, "data")):
             raise FileNotFoundError(
                 f"stage {stage!r} has no snapshot {snapshot_id!r}; "
                 f"known: {[m['snapshot_id'] for m in self.snapshots(stage)]}"
             )
-        return self.spark.read.parquet(os.path.join(hist, "data"))
+        with open(os.path.join(hist, "manifest.json")) as f:
+            return self._read(os.path.join(hist, "data"), json.load(f))
 
     def expire_snapshots(self, stage: str, keep: int = 1) -> int:
         """Drop all but the newest ``keep`` RETIRED snapshots (the
@@ -263,7 +273,7 @@ class CheckpointManager:
         data_dir = os.path.join(sdir, "data")
         if self.is_committed(stage):
             if not force:
-                return self.spark.read.parquet(data_dir)
+                return self._read(data_dir, self.manifest(stage))
             self._retire_current(stage)
 
         # rescue an interrupted retire: a manifest-only history entry
@@ -296,13 +306,21 @@ class CheckpointManager:
 
         token = uuid.uuid4().hex[:12]
         tmp_data = os.path.join(sdir, f"data.tmp-{token}")
-        writer = build_fn().write.mode("overwrite")
+        built = build_fn()
+        writer = built.write.mode("overwrite")
         if partition_by is not None:
             writer = writer.partitionBy(partition_by)
         writer.parquet(tmp_data)
         os.rename(tmp_data, data_dir)  # atomic snapshot swap
 
-        committed = self.spark.read.parquet(data_dir)
+        if any(f.endswith(".parquet") for _, _, fs in os.walk(data_dir) for f in fs):
+            committed = self.spark.read.parquet(data_dir)
+        else:
+            # no rows under partition_by: no file to infer from, so take
+            # the built schema with the partition column last (where a
+            # partitioned read puts it)
+            fields = sorted(built.schema.fields, key=lambda f: f.name == partition_by)
+            committed = self.spark.read.schema(StructType(fields)).parquet(data_dir)
         lineage = lineage_rows(committed, key_col, self.n_buckets, cell_col)
         manifest = {
             "stage": stage,

@@ -8,10 +8,12 @@ worker's per-task import guard (:func:`install_worker_import_guard`).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import tempfile
 import threading
+import uuid
 import zipfile
 import zipimport
 from collections import OrderedDict
@@ -79,22 +81,40 @@ def build_pyfiles_zip(out_path: str | None = None) -> str:
     cluster; locally :func:`get_spark` ships the same zip via
     ``addPyFile`` so Python workers can import the package regardless of
     the caller's cwd/sys.path (exactly what a real cluster requires).
+
+    The default path is named by a digest of the package sources
+    (``<tmp>/o2g_spark_pyfiles-<digest>.zip``), so processes running
+    different checkouts never share one archive; an existing archive is
+    reused. The archive is written under a temporary name and moved
+    into place with ``os.replace``, so no reader sees a half-written
+    file.
     """
     pkg_root = os.path.dirname(os.path.abspath(__file__))
-    if out_path is None:
-        out_path = os.path.join(tempfile.gettempdir(), "o2g_spark_pyfiles.zip")
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_root):
-            if "__pycache__" in dirpath:
-                continue
-            for fn in sorted(filenames):
-                if not fn.endswith(".py"):
-                    continue
+    sources = []
+    for dirpath, dirnames, filenames in os.walk(pkg_root):
+        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
+        for fn in sorted(filenames):
+            if fn.endswith(".py"):
                 full = os.path.join(dirpath, fn)
-                rel = os.path.join(
-                    "o2g_spark", os.path.relpath(full, pkg_root)
-                )
-                zf.write(full, rel)
+                rel = os.path.join("o2g_spark", os.path.relpath(full, pkg_root))
+                with open(full, "rb") as f:
+                    sources.append((rel, f.read()))
+    if out_path is None:
+        digest = hashlib.sha256()
+        for rel, data in sources:
+            digest.update(rel.encode() + b"\0" + hashlib.sha256(data).digest())
+        out_path = os.path.join(
+            tempfile.gettempdir(),
+            f"o2g_spark_pyfiles-{digest.hexdigest()[:16]}.zip",
+        )
+        if os.path.exists(out_path):
+            return out_path
+    tmp = f"{out_path}.{uuid.uuid4().hex}.tmp"
+    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+        for rel, data in sources:
+            info = zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0))
+            zf.writestr(info, data, zipfile.ZIP_DEFLATED)
+    os.replace(tmp, out_path)
     return out_path
 
 

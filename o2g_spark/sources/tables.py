@@ -84,10 +84,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
 def pages_df(spark: SparkSession, pages_pdf: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(pages_pdf, schema=PAGES_SCHEMA)
 

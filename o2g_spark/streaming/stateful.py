@@ -651,43 +651,28 @@ def _banded_docs(
     num_hashes: int, bands: int,
 ) -> DataFrame:
     """(band, key, did[, ts]) rows: minhash LSH banding as pure Column
-    expressions — identical banding to operators.dedup.minhash_lsh_pairs
-    (same signature family, same per-band md5 key), reusable on batch
-    AND streaming frames. Project-then-explode per CLAUDE.md rule 1."""
-    from ..operators.dedup import minhash_signature
+    expressions through operators.dedup.md5_band_keys — the key the
+    persisted LSH index stores — reusable on batch AND streaming
+    frames. Project-then-explode per CLAUDE.md rule 1."""
+    from ..operators.dedup import md5_band_keys, minhash_signature
 
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
-    rpb = num_hashes // bands
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.md5(
-                F.concat_ws(",", F.transform(
-                    F.slice(F.col("__sig"), b * rpb + 1, rpb),
-                    lambda v: v.cast("string"),
-                ))
-            ).alias("key"),
-        ),
-    )
     keep, out_cols = _key_cols(id_col, ts_col)
-    # Materialize the signature at a SHUFFLE boundary before banding.
-    # Without it CollapseProject merges the two projections: __sig is
-    # textually referenced once (inside the per-band slice lambda), so
-    # the optimizer's expensive-expression check passes — but lambda
-    # bodies evaluate INTERPRETED per array element, recomputing the
-    # whole minhash bands× per row (measured 9.4 s vs 1.5 s on 2k
-    # docs; it throttled streaming micro-batches to minutes). A
-    # Project can't merge across an Exchange, and "hash once, shuffle
-    # the hashes" is the engine's standing rule anyway. Cheap: rows
-    # are (did[, ts], 32-long array) — docs, not docs×bands.
+    # The repartition spreads the banding and everything after it over
+    # every core when the input arrives as one split (a small batch
+    # frame, a file-stream micro-batch). It no longer guards the
+    # signature: md5_band_keys let-binds it, so the band lambda reads a
+    # lambda variable and the minhash is evaluated once per row even
+    # where CollapseProject merges the two projections (without the
+    # binding that merge recomputed it bands× per row: 9.4 s vs 1.5 s
+    # on 2k docs). Rows crossing it are (did[, ts], 32-long array).
     par = docs.sparkSession.sparkContext.defaultParallelism
     sig = docs.select(
         *keep, minhash_signature(text_col, num_hashes).alias("__sig")
     ).repartition(par, "did")
     return (
-        sig.withColumn("__bands", band_arr)
+        sig.withColumn("__bands", md5_band_keys("__sig", num_hashes, bands))
         .select(*out_cols, F.explode("__bands").alias("__b"))
         .select("*", F.col("__b.band").alias("band"), F.col("__b.key").alias("key"))
         .drop("__b")

@@ -207,3 +207,38 @@ def test_manifest_atomic_marker(spark, tmp_path):
     assert set(names) == {"data", "manifest.json"}
     with open(os.path.join(base, "s", "manifest.json")) as f:
         assert json.load(f)["committed"] is True
+
+
+def test_empty_index_pairs_a_batch_to_its_self_pairs(spark, tmp_path):
+    """An LSH index and an embedding index built over EMPTY frames
+    commit, read back, and pair a new batch to exactly the batch's own
+    pairs (a partitioned write of no rows leaves no file to infer a
+    schema from, so committed stages are read with the manifest's)."""
+    from o2g_spark.operators import dedup, emb_index, lsh_index, similarity
+
+    texts = ["a b c d e f", "a b c d e f", "a b c d e g", "x y z w v u"]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string")
+    base = str(tmp_path / "lsh")
+    lsh_index.lsh_index_build(spark, base, docs.limit(0), num_hashes=8,
+                              bands=4)
+    got = lsh_index.minhash_lsh_pairs_incremental(spark, base, docs,
+                                                  threshold=0.4)
+    want = dedup.minhash_lsh_pairs(docs, "doc_id", "text", 8, 4, 0.4)
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() > 0
+    ckpt = CheckpointManager(spark, base)
+    assert ckpt.read_snapshot(lsh_index.BANDS_STAGE).count() == 0
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 2), 1.0] + [0.0] * 14) for i in range(4)],
+        "vec_id long, embedding array<double>")
+    base = str(tmp_path / "emb")
+    emb_index.emb_index_build(spark, base, vecs.limit(0), bands=4,
+                              bits_per_band=8, dim=16)
+    got = emb_index.embedding_near_dup_incremental(spark, base, vecs,
+                                                   sim_threshold=0.95)
+    want = similarity.embedding_near_dup_pairs(
+        vecs, sim_threshold=0.95, bands=4, bits_per_band=8, dim=16)
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() > 0

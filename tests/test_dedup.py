@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from o2g_spark import session as S
 from o2g_spark.functions import text as X
 from o2g_spark.operators import dedup
 
@@ -158,6 +159,48 @@ def test_minhash_lsh_sql_twin(corpus):
     )
     con.close()
     assert got == d
+
+
+def _physical_nodes(plan, node: str) -> int:
+    """``node`` expressions (Catalyst class name) in one physical plan,
+    not descending into the cached plans its in-memory scans read."""
+    n = 0
+
+    def walk(e):
+        nonlocal n
+        n += e.nodeName() == node
+        kids = e.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    def plans(p):
+        if p.nodeName() == "AdaptiveSparkPlan":
+            p = p.inputPlan()
+        yield p
+        for i in range(p.children().size()):
+            yield from plans(p.children().apply(i))
+
+    for p in plans(plan):
+        exprs = p.expressions()
+        for j in range(exprs.size()):
+            walk(exprs.apply(j))
+    return n
+
+
+def test_lsh_signature_cache_reads_jaccard_shingle_sets(spark, corpus):
+    """After jaccard_pairs(n=3) on a frame is collected, minhash_lsh_pairs
+    on the same frame builds its signature cache over jaccard's cached
+    shingle sets: the shingle regex occurs in only one of the two
+    cached plans, so the pass shingles the corpus once."""
+    dedup.jaccard_pairs(corpus, "doc_id", "text", 3, 0.5, max_df=None).collect()
+    dedup.minhash_lsh_pairs(corpus, "doc_id", "text", 32, 16, 0.4).collect()
+    counts = []
+    for key in ("dedup.jaccard.sh_full", "dedup.minhash_lsh.sig"):
+        cached = S._live_caches[S._session_key(corpus, key)]
+        rel = cached._jdf.queryExecution().withCachedData()
+        assert rel.nodeName() == "InMemoryRelation"
+        counts.append(_physical_nodes(rel.cacheBuilder().cachedPlan(), "RegExpReplace"))
+    assert counts == [1, 0]
 
 
 def test_simhash_udf_matches_python(corpus):

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from o2g_spark.functions import text as X
 from o2g_spark.operators import dedup, lsh_index, similarity
+from o2g_spark.streaming import stateful
 
 
 @pytest.fixture(scope="module")
@@ -162,6 +163,11 @@ def _lsh_bands(spark):
     return lsh_index._band_rows(sh, {"num_hashes": 8, "bands": 4})
 
 
+def _stream_bands(spark):
+    df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    return stateful._banded_docs(df, "id", "text", None, 8, 4)
+
+
 def _q8(spark):
     df = spark.createDataFrame([(1, [1.0, -0.5])], "id int, v array<double>")
     return df.select(similarity.quantized_embedding(F.col("v"), bits=8)[1])
@@ -177,8 +183,11 @@ def _q8(spark):
     # lsh banding: the signature's per-shingle md5 (depth 1) stays
     # outside the per-band lambda, whose own key md5 is depth 2
     (_lsh_bands, "Md5", [1, 2]),
+    # stream banding: the index's key function, so the same depths
+    (_stream_bands, "Md5", [1, 2]),
     # q8: the O(dim) absmax once per row, not per element
     (_q8, "ArrayMax", [0]),
-], ids=["shingles", "lang_id_words", "lang_id_max", "lsh_banding", "q8"])
+], ids=["shingles", "lang_id_words", "lang_id_max", "lsh_banding",
+         "stream_banding", "q8"])
 def test_let_binding_plan_shape(spark, build, node, depths):
     assert _lambda_depths(build(spark), node) == depths

@@ -1,7 +1,10 @@
 """cache_latest registry: session-keyed, locked, clearable; the
-worker-side zip invalidation guard."""
+worker-side zip invalidation guard; the content-named package zip."""
 
 import importlib
+import os
+import shutil
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -133,6 +136,37 @@ def test_zip_guard_rereads_only_a_changed_archive(tmp_path, monkeypatch):
         for name in ("o2g_guard_a", "o2g_guard_b"):
             sys.modules.pop(name, None)
         sys.path_importer_cache.pop(archive, None)
+
+
+def test_pyfiles_zip_named_by_content(tmp_path):
+    """A build from a changed copy of the package writes its own
+    archive and leaves an earlier build's file untouched; rebuilding
+    unchanged sources returns the existing archive."""
+    first = S.build_pyfiles_zip()
+    with open(first, "rb") as f:
+        before = f.read()
+    st = os.stat(first)
+    pkg = os.path.dirname(os.path.abspath(S.__file__))
+    copy = tmp_path / "o2g_spark"
+    shutil.copytree(pkg, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    (copy / "_changed.py").write_text("X = 1\n")
+    other = subprocess.run(
+        [sys.executable, "-c", "from o2g_spark.session import "
+         "build_pyfiles_zip; print(build_pyfiles_zip())"],
+        cwd=tmp_path, env={**os.environ, "PYTHONPATH": str(tmp_path)},
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    try:
+        assert other != first
+        with zipfile.ZipFile(other) as zf:
+            assert "o2g_spark/_changed.py" in zf.namelist()
+        with open(first, "rb") as f:
+            assert f.read() == before
+        assert os.stat(first).st_mtime_ns == st.st_mtime_ns
+        assert S.build_pyfiles_zip() == first
+    finally:
+        if other != first and os.path.exists(other):
+            os.remove(other)
 
 
 def test_worker_import_guard_installed_in_workers_only(spark, zones_pdf):
